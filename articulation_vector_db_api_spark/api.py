@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .operators.search import (
     DEFAULT_TOP_K,
-    assemble_context,
+    ServingIndex,
     open_serving_index,
     topk_search,
     topk_search_cached,
@@ -34,7 +34,9 @@ class EngineAPI:
     # ingest-once/query-many shape, main.py:60-76). Without one, /search
     # computes over the raw documents in data_dir (the cold path).
     chunk_table: str | None = None
-    _serving: DataFrame | None = field(
+    # a driver-resident ServingIndex when the table fits one cached
+    # partition, else a persisted DataFrame (open_serving_index)
+    _serving: DataFrame | ServingIndex | None = field(
         default=None, repr=False, compare=False
     )
     # serve() runs this API under ThreadingHTTPServer: without the
@@ -65,11 +67,11 @@ class EngineAPI:
             self._invalidate_locked()
 
     def _invalidate_locked(self) -> None:
-        if self._serving is not None:
+        if isinstance(self._serving, DataFrame):
             self._serving.unpersist()
-            self._serving = None
+        self._serving = None
 
-    def _topk(self, query: str, top_k: int) -> DataFrame:
+    def _topk(self, query: str, top_k: int) -> DataFrame | list:
         if self.chunk_table and (
             self._serving is not None or os.path.isdir(self.chunk_table)
         ):
@@ -91,12 +93,15 @@ class EngineAPI:
         chunks, total_results, context}."""
         validate_query(query)
         topk = self._topk(query, top_k)
-        # One distributed job: the ≤ top_k collected rows already carry
-        # everything the context string needs, so assemble it driver-side
-        # (same format as operators.search.assemble_context, which stays
-        # the distributed path for the driver-visible query) instead of
-        # re-executing the scoring plan a second time.
-        rows = sorted(topk.collect(), key=lambda r: (-r.score, r.id))
+        # At most one distributed job (none over a driver-resident
+        # index): the ≤ top_k rows already carry everything the context
+        # string needs, so assemble it driver-side (same format as
+        # operators.search.assemble_context, which stays the distributed
+        # path for the driver-visible query) instead of re-executing the
+        # scoring plan a second time.
+        if isinstance(topk, DataFrame):
+            topk = topk.collect()
+        rows = sorted(topk, key=lambda r: (-r.score, r.id))
         return {
             "query": query,
             "chunks": [

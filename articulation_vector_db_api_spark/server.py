@@ -19,7 +19,10 @@ Error shape mirrors FastAPI's ``HTTPException``: a JSON body
 404 unknown route / missing corpus, 500 engine failure).
 
 Design: the serving tier is deliberately thin — every endpoint is one
-``EngineAPI`` call, which is one short Spark job. ``ThreadingHTTPServer``
+``EngineAPI`` call. A warmed /search over a table that fits one cached
+partition runs no Spark job: it scores the driver-resident serving
+index (``operators.search.open_serving_index``). Other endpoints, and
+/search over larger tables, run short Spark jobs. ``ThreadingHTTPServer``
 gives request concurrency; Spark sessions are thread-safe for job
 submission, and the scheduler (FAIR at deployment) interleaves the
 short serving jobs. This tier exists for surface parity and smoke-level

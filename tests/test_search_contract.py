@@ -3,14 +3,47 @@
 
 from __future__ import annotations
 
+import math
+import random
+
 import pytest
+from pyspark.sql import DataFrame
 
 from articulation_vector_db_api_spark.operators.search import (
+    ServingIndex,
     assemble_context,
+    open_serving_index,
+    spark_round6,
     topk_search,
+    topk_search_cached,
 )
 from articulation_vector_db_api_spark.operators.stats import validate_query
+from articulation_vector_db_api_spark.sources.readers import load_table
 from tests.conftest import SF_SMALL
+
+SF_MEDIUM = "/root/testdata/sf0.01"
+SF_LARGE = "/root/testdata/sf0.1"
+
+
+def _rows(topk):
+    """Rows of a topk_search_cached result: a DataFrame over a
+    persisted index, a list over a driver-resident one."""
+    return topk.collect() if isinstance(topk, DataFrame) else topk
+
+
+def _release(idx) -> None:
+    if isinstance(idx, DataFrame):
+        idx.unpersist()
+
+
+def _chunk_rows(spark, sf_dir):
+    from articulation_vector_db_api_spark.operators.ingest import build_chunk_rows
+
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
+        "cast(doc_id as string) AS source", "text",
+        "cast(null as string) AS error",
+    )
+    return build_chunk_rows(docs)
 
 
 def test_empty_query_rejected(spark):
@@ -52,32 +85,25 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     indexed path, and EngineAPI invalidates the cache when the table
     is re-ingested underneath it."""
     from articulation_vector_db_api_spark.api import EngineAPI
-    from articulation_vector_db_api_spark.operators.ingest import (
-        build_chunk_rows, write_chunk_table,
-    )
+    from articulation_vector_db_api_spark.operators.ingest import write_chunk_table
     from articulation_vector_db_api_spark.operators.search import (
-        open_serving_index, topk_search_cached, topk_search_indexed,
+        topk_search_indexed,
     )
-    from articulation_vector_db_api_spark.sources.readers import load_table
 
     table = str(tmp_path / "chunks")
-    docs = load_table(spark, SF_SMALL, "documents").selectExpr(
-        "cast(doc_id as string) AS source", "text",
-        "cast(null as string) AS error",
-    )
-    write_chunk_table(build_chunk_rows(docs), table)
+    write_chunk_table(_chunk_rows(spark, SF_SMALL), table)
 
     idx = open_serving_index(spark, table)
     try:
         a = [(r.id, r.score) for r in
-             topk_search_cached(idx, "transfer credits", 5).collect()]
+             _rows(topk_search_cached(idx, "transfer credits", 5))]
         b = [(r.id, r.score) for r in
              topk_search_indexed(spark, table, "transfer credits", 5).collect()]
         assert a == b and len(a) == 5
         with pytest.raises(ValueError):
             topk_search_cached(idx, "  ")
     finally:
-        idx.unpersist()
+        _release(idx)
 
     api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table)
     resp = api.search("transfer credits", 3)
@@ -93,8 +119,136 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     assert resp2["total_results"] > 0
     assert api._serving is not None  # re-warmed over the upserted table
     # the re-warm sees the upserted partition
-    assert api._serving.filter("source = 'fresh'").count() > 0
+    assert "fresh" in api._serving.sources
     api._invalidate()
+
+
+def _queries(index: ServingIndex, n_random: int, n_exact: int, seed: int):
+    """Random 1-40-word queries over the corpus vocabulary, plus the
+    exact text of some stored chunks (each must score 1.0 first)."""
+    rng = random.Random(seed)
+    vocab = sorted({w for t in index.texts[:200] for w in t.split()})
+    rand = [" ".join(rng.choice(vocab) for _ in range(rng.randint(1, 40)))
+            for _ in range(n_random)]
+    exact = rng.sample(range(len(index.ids)), n_exact)
+    return rand, [(index.texts[i], index.ids[i]) for i in exact]
+
+
+@pytest.mark.parametrize("sf_dir", [SF_MEDIUM, SF_LARGE])
+def test_in_process_index_matches_persisted_path(spark, tmp_path, sf_dir):
+    """The driver-resident index returns the same rows (id, source,
+    text, score), in the same order, as the persisted-DataFrame path
+    for every top_k, including more than the row count. The table is
+    written unpartitioned: one file per source would make partition
+    discovery, not scoring, the cost of this test."""
+    table = str(tmp_path / "chunks")
+    _chunk_rows(spark, sf_dir).write.parquet(table)
+    local = open_serving_index(spark, table)
+    cached = open_serving_index(spark, table, partition_bytes=1)
+    try:
+        assert isinstance(local, ServingIndex)
+        assert isinstance(cached, DataFrame) and cached.is_cached
+        n = len(local.ids)
+        rand, exact = _queries(local, n_random=8, n_exact=3, seed=7)
+        for q in rand + [t for t, _ in exact]:
+            for k in (1, 5, 10, 20, n + 1):
+                a = [tuple(r) for r in topk_search_cached(local, q, k)]
+                b = [tuple(r) for r in topk_search_cached(cached, q, k).collect()]
+                assert a == b, (q[:40], k)
+                assert len(a) == min(k, n)
+        for text, cid in exact:
+            rows = topk_search_cached(local, text, 20)
+            assert rows[0].score == 1.0
+            assert cid in {r.id for r in rows if r.score == 1.0}
+    finally:
+        cached.unpersist()
+
+
+def test_spark_round6_matches_spark_sql(spark):
+    """In-process scores round like Spark SQL's round(x, 6): HALF_UP on
+    the shortest decimal, which Python's round does not do on three of
+    the five named half-way doubles. Also checked on half-way points
+    and their neighbours one ulp away."""
+    named = [0.1234565, 5e-07, 0.5000005, 0.9999995, -0.3333335]
+    assert [round(x, 6) == spark_round6(x) for x in named] == [
+        False, False, False, True, True]
+    rng = random.Random(6)
+    vals = list(named) + [-1e-7, 0.0, 1.0, -1.0]
+    for _ in range(2000):
+        x = (rng.randrange(-10**6, 10**6) + 0.5) / 1e6
+        vals += [x, math.nextafter(x, 2.0), math.nextafter(x, -2.0)]
+    df = spark.createDataFrame(list(enumerate(vals)), "i long, x double")
+    want = [r.s for r in df.selectExpr("i", "round(x, 6) AS s").orderBy("i").collect()]
+    got = [spark_round6(x) for x in vals]
+    assert [repr(g) for g in got] == [repr(w) for w in want]
+    assert want[:3] == [0.123457, 1e-06, 0.500001]
+
+
+@pytest.fixture(scope="module")
+def small_table(spark, tmp_path_factory) -> str:
+    """The SF_SMALL chunk table as ingest writes it (one directory per
+    source); the tests that use it only read it."""
+    from articulation_vector_db_api_spark.operators.ingest import write_chunk_table
+
+    table = str(tmp_path_factory.mktemp("serving") / "chunks")
+    write_chunk_table(_chunk_rows(spark, SF_SMALL), table)
+    return table
+
+
+def test_serving_index_fallbacks(spark, small_table):
+    """Above one partition, or when the table's size is unknown (a URI,
+    not a local directory), open_serving_index keeps the persisted
+    DataFrame, and it serves the same rows as the in-process index."""
+    table = small_table
+    local = open_serving_index(spark, table)
+    assert isinstance(local, ServingIndex)
+    for idx in (open_serving_index(spark, table, partition_bytes=1),
+                open_serving_index(spark, "file://" + table)):
+        try:
+            assert isinstance(idx, DataFrame) and idx.is_cached
+            for q, k in [("transfer credits", 5), ("customer data", 1),
+                         ("data", len(local.ids) + 2)]:
+                a = [tuple(r) for r in topk_search_cached(local, q, k)]
+                assert a == [tuple(r) for r in topk_search_cached(idx, q, k).collect()]
+        finally:
+            idx.unpersist()
+    assert topk_search_cached(local, "data", 0) == []
+    with pytest.raises(ValueError):
+        topk_search_cached(local, "data", -1)
+
+
+def test_in_process_search_starts_no_spark_job(spark, small_table):
+    """A warmed EngineAPI over a one-partition table answers /search
+    without a Spark job, with the same response as over the persisted
+    index."""
+    from articulation_vector_db_api_spark.api import EngineAPI
+
+    table = small_table
+    api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table).warm()
+    assert isinstance(api._serving, ServingIndex)
+    spark_api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table)
+    spark_api._serving = open_serving_index(spark, table, partition_bytes=1)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "in-process-search-probe"
+    sc.setJobGroup(group, "zero-job check")
+    try:
+        before = tracker.getJobIdsForGroup(group)
+        resp = api.search("transfer credits", 5)
+        assert tracker.getJobIdsForGroup(group) == before
+        # the probe does see this thread's jobs
+        spark.range(1).count()
+        assert len(tracker.getJobIdsForGroup(group)) > len(before)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert resp["total_results"] == 5
+    for q, k in [("transfer credits", 5), ("customer data", 10), ("x", 1)]:
+        assert api.search(q, k) == spark_api.search(q, k)
+    spark_api._invalidate()
+    api._invalidate()
+    assert api._serving is None
 
 
 def test_mmr_arbitrary_k(spark):
