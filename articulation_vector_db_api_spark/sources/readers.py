@@ -13,6 +13,7 @@ else.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -131,23 +132,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # spread_input() decision below without touching Spark planning (a
 # df.rdd.getNumPartitions() probe costs ~100 ms of py4j/planning per
 # call, which would land inside the bench's timed region).
-_TABLE_BYTES: dict[str, int] = {}
+# The memo is only valid for tables the session never rewrites.
+_TABLE_BYTES: dict[str, int | None] = {}
 
 
-def _path_bytes(path: str) -> int:
-    cached = _TABLE_BYTES.get(path)
-    if cached is None:
+def _path_bytes(path: str) -> int | None:
+    """On-disk bytes of a local file or directory; None when the size
+    is unknown (a path that is neither, such as an ``s3a://`` or
+    ``hdfs://`` URI)."""
+    if path not in _TABLE_BYTES:
+        size = None
         if os.path.isfile(path):
-            cached = os.path.getsize(path)
-        else:
-            cached = 0
+            size = os.path.getsize(path)
+        elif os.path.isdir(path):
+            size = 0
             for root, _dirs, files in os.walk(path):
                 for fname in files:
                     if fname.startswith((".", "_")):
                         continue  # _SUCCESS, .crc sidecars
-                    cached += os.path.getsize(os.path.join(root, fname))
-        _TABLE_BYTES[path] = cached
-    return cached
+                    size += os.path.getsize(os.path.join(root, fname))
+        _TABLE_BYTES[path] = size
+    return _TABLE_BYTES[path]
 
 
 def _conf_bytes(raw: str) -> int:
@@ -176,6 +181,10 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     reads the session's own ``maxPartitionBytes`` so the decision
     tracks however the deployment sizes its splits.
 
+    A table whose size is unknown (not a local path) is left as it is:
+    a remote store scans as many splits, and shuffling it is the cost
+    this function exists to avoid.
+
     Locally the plan is identical to the unconditional repartition
     (every fixture SF is far below the threshold). Results never depend
     on the branch: round-robin placement is not observable in any
@@ -189,9 +198,55 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     max_split = _conf_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    if _path_bytes(os.path.join(sf_dir, f"{name}.parquet")) >= n * max_split:
+    size = _path_bytes(os.path.join(sf_dir, f"{name}.parquet"))
+    if size is None or size >= n * max_split:
         return df
     return df.repartition(n)
+
+
+def per_doc_map(
+    spark: SparkSession,
+    sf_dir: str,
+    cols: tuple[str, ...],
+    schema: T.StructType | str,
+    row_fn: Callable[..., tuple],
+) -> DataFrame:
+    """One output row per ``documents`` row, sorted by ``doc_id``:
+    ``row_fn(*values)`` over the ``cols`` of each row, run inside an
+    Arrow-batched map. ``schema`` (a StructType or a DDL string such as
+    ``"doc_id bigint, n bigint"``) declares the tuple ``row_fn``
+    returns, field by field.
+
+    The scan goes through :func:`spread_input`, then the map's output
+    goes through a ``repartition("doc_id")`` shuffle barrier before the
+    sort. Without it the range exchange's sampling job re-executes the
+    whole narrow subtree, so the map would run twice; the materialized
+    shuffle is reused by both the sampling and the sort job, so it runs
+    once (r16). The barrier carries the map's output rows (one per
+    doc), never a decoded payload.
+
+    The map function is named ``batches`` because the formatted plan
+    prints it: ``MapInPandas`` shows ``batches(doc_id#...)``.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = [row_fn(*vals) for vals in zip(*(pdf[c] for c in cols))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(*cols)
+        .transform(spread_input, sf_dir, "documents")
+        .mapInPandas(batches, schema)
+        .repartition("doc_id")
+        .orderBy("doc_id")
+    )
 
 
 def load_binary_corpus(spark: SparkSession, directory: str, glob: str = "*.pdf") -> DataFrame:

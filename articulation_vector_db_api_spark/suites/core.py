@@ -8,6 +8,8 @@ compute the identical IEEE arithmetic.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -24,7 +26,7 @@ from ..operators.search import (
     topk_search,
 )
 from ..registry import register
-from ..sources.readers import load_table, spread_input
+from ..sources.readers import load_table, per_doc_map, spread_input
 
 FLAGSHIP_QUERY = "transfer credits"  # the reference's own smoke query, test_api.sh:50-56
 FLAGSHIP_K = 5  # default top_k, main.py:89
@@ -2446,70 +2448,41 @@ def ingest_office_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     `operators/ingest._extract_one`'s dispatch and must reconstruct
     the ORIGINAL text exactly — the sha256 of the DOCX-extracted text
     is compared against the oracle's digest of documents.text, so the
-    whole build-extract cycle is pinned lossless cross-engine.
+    whole build-extract cycle is pinned lossless cross-engine."""
+    from ..functions.officetext import (
+        build_docx,
+        build_odt,
+        build_pptx,
+        extract_odt_text,
+        extract_pptx_text,
+    )
+    from ..operators.ingest import _extract_one
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("docx_lossless", T.LongType()),
-            T.StructField("odt_lossless", T.LongType()),
-            T.StructField("pptx_lossless", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
-        ]
+    schema = (
+        "doc_id bigint, docx_lossless bigint, odt_lossless bigint, "
+        "pptx_lossless bigint, n_chars bigint, text_sha string"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from ..functions.officetext import (
-            build_docx,
-            build_odt,
-            build_pptx,
-            extract_odt_text,
-            extract_pptx_text,
+    def row(doc_id, text):
+        text = str(text)
+        paras = text.split("\n")
+        got_docx, err = _extract_one(
+            f"{int(doc_id)}.docx", build_docx(paras)
         )
-        from ..operators.ingest import _extract_one
+        got_odt = extract_odt_text(build_odt(paras))
+        got_pptx = extract_pptx_text(build_pptx([paras]))
+        return (
+            doc_id,
+            int(err is None and got_docx == text),
+            int(got_odt == text),
+            int(got_pptx == text),
+            len(text),
+            hashlib.sha256(
+                (got_docx or "").encode()
+            ).hexdigest(),
+        )
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = str(text)
-                paras = text.split("\n")
-                got_docx, err = _extract_one(
-                    f"{int(doc_id)}.docx", build_docx(paras)
-                )
-                got_odt = extract_odt_text(build_odt(paras))
-                got_pptx = extract_pptx_text(build_pptx([paras]))
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got_docx == text),
-                        int(got_odt == text),
-                        int(got_pptx == text),
-                        len(text),
-                        hashlib.sha256(
-                            (got_docx or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -2535,84 +2508,56 @@ def ingest_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sha pinned cross-engine against documents.text), plus a
     two-chapter build whose spine-ordered extraction must equal the
     halves joined by the chapter separator. The container shape is
-    checked too (stored `mimetype` first — the EPUB OCF rule).
+    checked too (stored `mimetype` first — the EPUB OCF rule)."""
+    import io
+    import zipfile
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
+    from ..functions.epub import build_epub, extract_epub_text
+    from ..operators.ingest import _extract_one
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("epub_lossless", T.LongType()),
-            T.StructField("multi_chapter_ok", T.LongType()),
-            T.StructField("mimetype_first", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
-        ]
+    schema = (
+        "doc_id bigint, epub_lossless bigint, multi_chapter_ok bigint, "
+        "mimetype_first bigint, n_chars bigint, text_sha string"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import io
-        import zipfile
+    def row(doc_id, text):
+        text = str(text)
+        lines = text.split("\n")
+        got, err = _extract_one(
+            f"{int(doc_id)}.epub", build_epub([lines])
+        )
+        # two-chapter split; single-line docs get a witness
+        # appendix chapter so the spine walk is still 2-deep
+        if len(lines) >= 2:
+            mid = len(lines) // 2
+            ch2 = lines[mid:]
+        else:
+            mid = len(lines)
+            ch2 = ["appendix"]
+        two = extract_epub_text(
+            build_epub([lines[:mid], ch2])
+        )
+        expect_two = (
+            "\n".join(lines[:mid]) + "\n\n" + "\n".join(ch2)
+        )
+        with zipfile.ZipFile(
+            io.BytesIO(build_epub([lines]))
+        ) as z:
+            info = z.infolist()[0]
+            mt_first = int(
+                info.filename == "mimetype"
+                and info.compress_type == zipfile.ZIP_STORED
+            )
+        return (
+            doc_id,
+            int(err is None and got == text),
+            int(two == expect_two),
+            mt_first,
+            len(text),
+            hashlib.sha256((got or "").encode()).hexdigest(),
+        )
 
-        from ..functions.epub import build_epub, extract_epub_text
-        from ..operators.ingest import _extract_one
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                text = str(text)
-                lines = text.split("\n")
-                got, err = _extract_one(
-                    f"{int(doc_id)}.epub", build_epub([lines])
-                )
-                # two-chapter split; single-line docs get a witness
-                # appendix chapter so the spine walk is still 2-deep
-                if len(lines) >= 2:
-                    mid = len(lines) // 2
-                    ch2 = lines[mid:]
-                else:
-                    mid = len(lines)
-                    ch2 = ["appendix"]
-                two = extract_epub_text(
-                    build_epub([lines[:mid], ch2])
-                )
-                expect_two = (
-                    "\n".join(lines[:mid]) + "\n\n" + "\n".join(ch2)
-                )
-                with zipfile.ZipFile(
-                    io.BytesIO(build_epub([lines]))
-                ) as z:
-                    info = z.infolist()[0]
-                    mt_first = int(
-                        info.filename == "mimetype"
-                        and info.compress_type == zipfile.ZIP_STORED
-                    )
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got == text),
-                        int(two == expect_two),
-                        mt_first,
-                        len(text),
-                        hashlib.sha256((got or "").encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -2640,96 +2585,66 @@ def ingest_mail_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the plain part); extraction must reproduce the body exactly
     modulo MIME's canonical trailing newline, sha-pinned cross-engine
     against documents.text. A two-message mboxrd split of the body
-    exercises the ^>*From quoting roundtrip and the archive walk.
-
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc, no shuffle of document bytes."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("eml_lossless", T.LongType()),
-            T.StructField("multipart", T.LongType()),
-            T.StructField("plain_preferred", T.LongType()),
-            T.StructField("mbox_messages", T.LongType()),
-            T.StructField("mbox_lossless", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
-        ]
+    exercises the ^>*From quoting roundtrip and the archive walk."""
+    from ..functions.mailtext import (
+        build_eml,
+        build_mbox,
+        extract_eml,
+        extract_mbox_text,
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    schema = (
+        "doc_id bigint, eml_lossless bigint, multipart bigint, "
+        "plain_preferred bigint, mbox_messages bigint, mbox_lossless bigint, "
+        "n_chars bigint, text_sha string"
+    )
 
-        from ..functions.mailtext import (
-            build_eml,
-            build_mbox,
-            extract_eml,
-            extract_mbox_text,
+    def row(doc_id, text):
+        i = int(doc_id)
+        text = str(text)
+        multi = i % 2 == 1
+        raw = build_eml(
+            f"doc {i}",
+            text,
+            html_alternative=(
+                "<p>decoy html body</p>" if multi else None
+            ),
+        )
+        m = extract_eml(raw)
+        got = m["text"]
+        # MIME canonicalizes the body to end with a newline
+        recon = (
+            got if text.endswith("\n") else got[: -1]
+        ) if got.endswith("\n") else got
+        lines = text.split("\n")
+        mid = max(1, len(lines) // 2)
+        mbox = build_mbox(
+            [
+                build_eml(f"part 1 of {i}", "\n".join(lines[:mid])),
+                build_eml(f"part 2 of {i}", "\n".join(lines[mid:])),
+            ]
+        )
+        both = extract_mbox_text(mbox)
+        mbox_ok = int(
+            both.count("Subject: part ") == 2
+            and "\n".join(lines[:mid]).rstrip("\n") in both
+            and "\n".join(lines[mid:]).rstrip("\n") in both
+        )
+        return (
+            doc_id,
+            int(recon == text),
+            int(multi),
+            int(
+                m["body_source"] == "plain"
+                and "decoy" not in got
+            ),
+            2,
+            mbox_ok,
+            len(text),
+            hashlib.sha256(recon.encode()).hexdigest(),
         )
 
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                multi = i % 2 == 1
-                raw = build_eml(
-                    f"doc {i}",
-                    text,
-                    html_alternative=(
-                        "<p>decoy html body</p>" if multi else None
-                    ),
-                )
-                m = extract_eml(raw)
-                got = m["text"]
-                # MIME canonicalizes the body to end with a newline
-                recon = (
-                    got if text.endswith("\n") else got[: -1]
-                ) if got.endswith("\n") else got
-                lines = text.split("\n")
-                mid = max(1, len(lines) // 2)
-                mbox = build_mbox(
-                    [
-                        build_eml(f"part 1 of {i}", "\n".join(lines[:mid])),
-                        build_eml(f"part 2 of {i}", "\n".join(lines[mid:])),
-                    ]
-                )
-                both = extract_mbox_text(mbox)
-                mbox_ok = int(
-                    both.count("Subject: part ") == 2
-                    and "\n".join(lines[:mid]).rstrip("\n") in both
-                    and "\n".join(lines[mid:]).rstrip("\n") in both
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        int(recon == text),
-                        int(multi),
-                        int(
-                            m["body_source"] == "plain"
-                            and "decoy" not in got
-                        ),
-                        2,
-                        mbox_ok,
-                        len(text),
-                        hashlib.sha256(recon.encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -2761,102 +2676,72 @@ def ingest_archive_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract back to the original text (the .txt sha is pinned
     cross-engine); a one-member .zip exercises the second container;
     a corrupt archive must come back as ONE isolated error row, not
-    an exception (the O7 fault boundary at archive granularity).
+    an exception (the O7 fault boundary at archive granularity)."""
+    import io
+    import tarfile
+    import zipfile
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc; member bytes never leave the partition."""
-    from collections.abc import Iterator
+    from ..functions.mailtext import build_eml
+    from ..functions.officetext import build_docx
+    from ..operators.ingest import _explode_one, _extract_one
 
-    import pandas as pd
-    from pyspark.sql import types as T
+    schema = (
+        "doc_id bigint, n_members bigint, txt_lossless bigint, "
+        "docx_lossless bigint, eml_lossless bigint, zip_members bigint, "
+        "bad_isolated bigint, n_chars bigint, text_sha string"
+    )
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("txt_lossless", T.LongType()),
-            T.StructField("docx_lossless", T.LongType()),
-            T.StructField("eml_lossless", T.LongType()),
-            T.StructField("zip_members", T.LongType()),
-            T.StructField("bad_isolated", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
+    def row(doc_id, text):
+        i = int(doc_id)
+        text = str(text)
+        members = [
+            ("doc.txt", text.encode()),
+            ("doc.docx", build_docx(text.split("\n"))),
+            ("doc.eml", build_eml(f"doc {i}", text)),
         ]
-    )
+        buf = io.BytesIO()
+        # witness-construction cost only: the archive is the
+        # query's INPUT; level 1 halves the zlib time and no
+        # output column depends on the compressed bytes
+        with tarfile.open(
+            fileobj=buf, mode="w:gz", compresslevel=1
+        ) as tf:
+            for name, data in members:
+                info = tarfile.TarInfo(name)
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+        exploded = _explode_one(f"{i}.tar.gz", buf.getvalue())
+        got = {}
+        for _p, member, content, err in exploded:
+            assert err is None
+            got[member], _e = _extract_one(member, content)
+        zb = io.BytesIO()
+        with zipfile.ZipFile(zb, "w") as z:
+            z.writestr("only.txt", text)
+        zrows = _explode_one(f"{i}.zip", zb.getvalue())
+        bad = _explode_one(f"{i}.tar.gz", b"\x1f\x8b garbage")
+        eml_text = got.get("doc.eml", "")
+        eml_body = eml_text.split("\n\n", 1)[1] if "\n\n" in eml_text else ""
+        eml_ok = eml_body == text or eml_body == text + "\n"
+        return (
+            doc_id,
+            len(exploded),
+            int(got.get("doc.txt") == text),
+            int(got.get("doc.docx") == text),
+            int(eml_ok),
+            len(zrows),
+            int(
+                len(bad) == 1
+                and bad[0][3] is not None
+                and bad[0][2] is None
+            ),
+            len(text),
+            hashlib.sha256(
+                (got.get("doc.txt") or "").encode()
+            ).hexdigest(),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import io
-        import tarfile
-        import zipfile
-
-        from ..functions.mailtext import build_eml
-        from ..functions.officetext import build_docx
-        from ..operators.ingest import _explode_one, _extract_one
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                members = [
-                    ("doc.txt", text.encode()),
-                    ("doc.docx", build_docx(text.split("\n"))),
-                    ("doc.eml", build_eml(f"doc {i}", text)),
-                ]
-                buf = io.BytesIO()
-                # witness-construction cost only: the archive is the
-                # query's INPUT; level 1 halves the zlib time and no
-                # output column depends on the compressed bytes
-                with tarfile.open(
-                    fileobj=buf, mode="w:gz", compresslevel=1
-                ) as tf:
-                    for name, data in members:
-                        info = tarfile.TarInfo(name)
-                        info.size = len(data)
-                        tf.addfile(info, io.BytesIO(data))
-                exploded = _explode_one(f"{i}.tar.gz", buf.getvalue())
-                got = {}
-                for _p, member, content, err in exploded:
-                    assert err is None
-                    got[member], _e = _extract_one(member, content)
-                zb = io.BytesIO()
-                with zipfile.ZipFile(zb, "w") as z:
-                    z.writestr("only.txt", text)
-                zrows = _explode_one(f"{i}.zip", zb.getvalue())
-                bad = _explode_one(f"{i}.tar.gz", b"\x1f\x8b garbage")
-                eml_text = got.get("doc.eml", "")
-                eml_body = eml_text.split("\n\n", 1)[1] if "\n\n" in eml_text else ""
-                eml_ok = eml_body == text or eml_body == text + "\n"
-                rows.append(
-                    (
-                        doc_id,
-                        len(exploded),
-                        int(got.get("doc.txt") == text),
-                        int(got.get("doc.docx") == text),
-                        int(eml_ok),
-                        len(zrows),
-                        int(
-                            len(bad) == 1
-                            and bad[0][3] is not None
-                            and bad[0][2] is None
-                        ),
-                        len(text),
-                        hashlib.sha256(
-                            (got.get("doc.txt") or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -2889,91 +2774,61 @@ def ingest_rtf_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     page whose extraction must equal the whitespace-normalized
     paragraph view with the <title> recovered and the paragraph
     count matching the oracle's non-empty-line count (raw decode
-    would ingest tag soup — the defect this dispatch entry fixes).
+    would ingest tag soup — the defect this dispatch entry fixes)."""
+    from ..functions.htmltext import extract_main_text
+    from ..functions.officetext import _xml_escape
+    from ..functions.rtftext import build_rtf
+    from ..operators.ingest import _extract_one
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("rtf_lossless", T.LongType()),
-            T.StructField("rtf_destinations_clean", T.LongType()),
-            T.StructField("html_normalized_ok", T.LongType()),
-            T.StructField("html_title_ok", T.LongType()),
-            T.StructField("html_paragraphs", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
-        ]
+    schema = (
+        "doc_id bigint, rtf_lossless bigint, rtf_destinations_clean bigint, "
+        "html_normalized_ok bigint, html_title_ok bigint, "
+        "html_paragraphs bigint, n_chars bigint, text_sha string"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(doc_id, text):
+        i = int(doc_id)
+        text = str(text)
+        lines = text.split("\n")
+        rtf = build_rtf(lines)
+        got_rtf, err = _extract_one(f"{i}.rtf", rtf)
+        # splice destination groups real writers emit
+        dirty = rtf.replace(
+            b"\\uc1",
+            b"\\uc1{\\*\\generator SECRETGEN}"
+            b"{\\info{\\title SECRETTITLE}}",
+            1,
+        )
+        got_dirty, _e = _extract_one(f"{i}d.rtf", dirty)
+        body = "".join(
+            f"<p>{_xml_escape(ln)}</p>" for ln in lines
+        )
+        html = (
+            f"<html><head><title>doc {i}</title></head>"
+            f"<body>{body}</body></html>"
+        )
+        out = extract_main_text(html)
+        got_html, _e2 = _extract_one(f"{i}.html", html.encode())
+        norm = "\n".join(
+            " ".join(ln.split()) for ln in lines if ln.split()
+        )
+        return (
+            doc_id,
+            int(err is None and got_rtf == text),
+            int(
+                got_dirty == text
+                and "SECRET" not in (got_dirty or "")
+            ),
+            int(out["text"] == norm and got_html == norm),
+            int(out["title"] == f"doc {i}"),
+            out["n_paragraphs"],
+            len(text),
+            hashlib.sha256(
+                (got_rtf or "").encode()
+            ).hexdigest(),
+        )
 
-        from ..functions.htmltext import extract_main_text
-        from ..functions.officetext import _xml_escape
-        from ..functions.rtftext import build_rtf
-        from ..operators.ingest import _extract_one
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                lines = text.split("\n")
-                rtf = build_rtf(lines)
-                got_rtf, err = _extract_one(f"{i}.rtf", rtf)
-                # splice destination groups real writers emit
-                dirty = rtf.replace(
-                    b"\\uc1",
-                    b"\\uc1{\\*\\generator SECRETGEN}"
-                    b"{\\info{\\title SECRETTITLE}}",
-                    1,
-                )
-                got_dirty, _e = _extract_one(f"{i}d.rtf", dirty)
-                body = "".join(
-                    f"<p>{_xml_escape(ln)}</p>" for ln in lines
-                )
-                html = (
-                    f"<html><head><title>doc {i}</title></head>"
-                    f"<body>{body}</body></html>"
-                )
-                out = extract_main_text(html)
-                got_html, _e2 = _extract_one(f"{i}.html", html.encode())
-                norm = "\n".join(
-                    " ".join(ln.split()) for ln in lines if ln.split()
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        int(err is None and got_rtf == text),
-                        int(
-                            got_dirty == text
-                            and "SECRET" not in (got_dirty or "")
-                        ),
-                        int(out["text"] == norm and got_html == norm),
-                        int(out["title"] == f"doc {i}"),
-                        out["n_paragraphs"],
-                        len(text),
-                        hashlib.sha256(
-                            (got_rtf or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -3014,166 +2869,140 @@ def pipeline_document_corpus_ingest(
     Every payload must recover the document text (`ok`) to be
     `admitted` — the same admission-ledger shape the delivery
     capstone emits, so the curation tier consumes one schema for
-    both. Oracle recomputes the unit counts closed-form.
+    both. Oracle recomputes the unit counts closed-form."""
+    import io
+    import tarfile
 
-    Scale shape: Arrow-batched narrow map; archive/message bytes
-    never shuffle — only the ledger row leaves the task."""
-    from collections.abc import Iterator
+    from ..functions.epub import build_epub, extract_epub_text
+    from ..functions.mailtext import (
+        build_eml,
+        build_mbox,
+        extract_eml,
+        split_mbox,
+    )
+    from ..functions.officetext import _xml_escape
+    from ..functions.rtftext import build_rtf
+    from ..operators.ingest import _explode_one, _extract_one
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("modality", T.StringType()),
-            T.StructField("units", T.LongType()),
-            T.StructField("ok", T.LongType()),
-            T.StructField("admitted", T.LongType()),
-        ]
+    schema = (
+        "doc_id bigint, modality string, units bigint, ok bigint, "
+        "admitted bigint"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import tarfile
-
-        from ..functions.epub import build_epub, extract_epub_text
-        from ..functions.mailtext import (
-            build_eml,
-            build_mbox,
-            extract_eml,
-            split_mbox,
-        )
-        from ..functions.officetext import _xml_escape
-        from ..functions.rtftext import build_rtf
-        from ..operators.ingest import _explode_one, _extract_one
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                kind = i % 4
-                text = str(text)
-                lines = text.split("\n")
-                ok = 0
-                units = 0
-                try:
-                    if kind == 0:
-                        mid = max(1, len(lines) // 2)
-                        h1, h2 = (
-                            "\n".join(lines[:mid]),
-                            "\n".join(lines[mid:]),
-                        )
-                        msgs = split_mbox(
-                            build_mbox(
-                                [
-                                    build_eml("p1", h1),
-                                    build_eml("p2", h2),
-                                ]
-                            )
-                        )
-                        units = len(msgs)
-                        bodies = [
-                            extract_eml(m)["text"].rstrip("\n")
-                            for m in msgs
+    def row(doc_id, text):
+        i = int(doc_id)
+        kind = i % 4
+        text = str(text)
+        lines = text.split("\n")
+        ok = 0
+        units = 0
+        try:
+            if kind == 0:
+                mid = max(1, len(lines) // 2)
+                h1, h2 = (
+                    "\n".join(lines[:mid]),
+                    "\n".join(lines[mid:]),
+                )
+                msgs = split_mbox(
+                    build_mbox(
+                        [
+                            build_eml("p1", h1),
+                            build_eml("p2", h2),
                         ]
-                        ok = int(
-                            bodies == [h1.rstrip("\n"), h2.rstrip("\n")]
-                        )
-                    elif kind == 1:
-                        mid = max(1, len(lines) // 2)
-                        ch2 = lines[mid:] or ["appendix"]
-                        blob = build_epub([lines[:mid], ch2])
-                        got = extract_epub_text(blob)
-                        units = 2  # chapters BUILT — not re-derived
-                        # from separator counts, which a blank line
-                        # inside the text would inflate (r14 review)
-                        ok = int(
-                            got
-                            == "\n".join(lines[:mid]) + "\n\n"
-                            + "\n".join(ch2)
-                        )
-                    elif kind == 2:
-                        html_body = "".join(
-                            f"<p>{_xml_escape(ln)}</p>" for ln in lines
-                        )
-                        members = [
-                            ("doc.txt", text.encode()),
-                            ("doc.rtf", build_rtf(lines)),
-                            (
-                                "doc.html",
-                                f"<html><body>{html_body}"
-                                "</body></html>".encode(),
-                            ),
-                        ]
-                        buf = io.BytesIO()
-                        with tarfile.open(
-                            fileobj=buf, mode="w:gz"
-                        ) as tf:
-                            for name, data in members:
-                                info = tarfile.TarInfo(name)
-                                info.size = len(data)
-                                tf.addfile(info, io.BytesIO(data))
-                        exploded = _explode_one(
-                            f"{i}.tar.gz", buf.getvalue()
-                        )
-                        units = len(exploded)
-                        norm = "\n".join(
-                            " ".join(ln.split())
-                            for ln in lines
-                            if ln.split()
-                        )
-                        want = {
-                            "doc.txt": text,
-                            "doc.rtf": text,
-                            "doc.html": norm,
-                        }
-                        ok = int(
-                            all(e[3] is None for e in exploded)
-                            and all(
-                                _extract_one(m, c)[0] == want[m]
-                                for _p, m, c, _e in exploded
-                            )
-                        )
-                    else:
-                        raw = build_eml(
-                            f"doc {i}", text,
-                            html_alternative="<p>decoy</p>",
-                        )
-                        m = extract_eml(raw)
-                        units = 1
-                        got = m["text"]
-                        recon = (
-                            got[:-1]
-                            if got.endswith("\n")
-                            and not text.endswith("\n")
-                            else got
-                        )
-                        ok = int(
-                            recon == text
-                            and m["body_source"] == "plain"
-                        )
-                except (ValueError, NotImplementedError):
-                    ok = 0
-                rows.append(
-                    (
-                        doc_id,
-                        ("mbox", "epub", "archive", "eml")[kind],
-                        units,
-                        ok,
-                        int(ok == 1),
                     )
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+                units = len(msgs)
+                bodies = [
+                    extract_eml(m)["text"].rstrip("\n")
+                    for m in msgs
+                ]
+                ok = int(
+                    bodies == [h1.rstrip("\n"), h2.rstrip("\n")]
+                )
+            elif kind == 1:
+                mid = max(1, len(lines) // 2)
+                ch2 = lines[mid:] or ["appendix"]
+                blob = build_epub([lines[:mid], ch2])
+                got = extract_epub_text(blob)
+                units = 2  # chapters BUILT — not re-derived
+                # from separator counts, which a blank line
+                # inside the text would inflate (r14 review)
+                ok = int(
+                    got
+                    == "\n".join(lines[:mid]) + "\n\n"
+                    + "\n".join(ch2)
+                )
+            elif kind == 2:
+                html_body = "".join(
+                    f"<p>{_xml_escape(ln)}</p>" for ln in lines
+                )
+                members = [
+                    ("doc.txt", text.encode()),
+                    ("doc.rtf", build_rtf(lines)),
+                    (
+                        "doc.html",
+                        f"<html><body>{html_body}"
+                        "</body></html>".encode(),
+                    ),
+                ]
+                buf = io.BytesIO()
+                with tarfile.open(
+                    fileobj=buf, mode="w:gz"
+                ) as tf:
+                    for name, data in members:
+                        info = tarfile.TarInfo(name)
+                        info.size = len(data)
+                        tf.addfile(info, io.BytesIO(data))
+                exploded = _explode_one(
+                    f"{i}.tar.gz", buf.getvalue()
+                )
+                units = len(exploded)
+                norm = "\n".join(
+                    " ".join(ln.split())
+                    for ln in lines
+                    if ln.split()
+                )
+                want = {
+                    "doc.txt": text,
+                    "doc.rtf": text,
+                    "doc.html": norm,
+                }
+                ok = int(
+                    all(e[3] is None for e in exploded)
+                    and all(
+                        _extract_one(m, c)[0] == want[m]
+                        for _p, m, c, _e in exploded
+                    )
+                )
+            else:
+                raw = build_eml(
+                    f"doc {i}", text,
+                    html_alternative="<p>decoy</p>",
+                )
+                m = extract_eml(raw)
+                units = 1
+                got = m["text"]
+                recon = (
+                    got[:-1]
+                    if got.endswith("\n")
+                    and not text.endswith("\n")
+                    else got
+                )
+                ok = int(
+                    recon == text
+                    and m["body_source"] == "plain"
+                )
+        except (ValueError, NotImplementedError):
+            ok = 0
+        return (
+            doc_id,
+            ("mbox", "epub", "archive", "eml")[kind],
+            units,
+            ok,
+            int(ok == 1),
+        )
 
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -3220,134 +3049,103 @@ def scan_zstd_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
       members (tarfile has no zstd mode pre-3.14 — the frame decode
       is ours);
     - a corrupted frame must isolate as an error row, not raise
-      (the O7 fault boundary).
+      (the O7 fault boundary)."""
+    import io
+    import json
+    import tarfile
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text) — one
-    row per doc, compressed bytes never leave the partition, no
-    shuffle. At a real 100 TB crawl only the DECODE side runs."""
-    from collections.abc import Iterator
+    import pyarrow as pa
 
-    import pandas as pd
-    from pyspark.sql import types as T
+    from ..functions.zstd import build_zstd_frames, decompress_zstd
+    from ..operators.ingest import _explode_one, _extract_one
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("jsonl_lossless", T.LongType()),
-            T.StructField("multiframe_ok", T.LongType()),
-            T.StructField("dispatch_lossless", T.LongType()),
-            T.StructField("tar_members", T.LongType()),
-            T.StructField("bad_isolated", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
+    schema = (
+        "doc_id bigint, jsonl_lossless bigint, multiframe_ok bigint, "
+        "dispatch_lossless bigint, tar_members bigint, bad_isolated bigint, "
+        "n_chars bigint, text_sha string"
+    )
+
+    def ref_compress(data: bytes) -> bytes:
+        codec = pa.Codec("zstd", compression_level=3)  # not picklable
+        return codec.compress(data).to_pybytes()
+
+    def row(doc_id, text):
+        i = int(doc_id)
+        text = str(text)
+        # 1. .jsonl.zst member, reference-encoded (character
+        # midpoint split — JSON escapes any newlines, so the
+        # records reassemble by plain concatenation)
+        mid = len(text) // 2
+        recs = [
+            {"id": i, "part": 0, "text": text[:mid]},
+            {"id": i, "part": 1, "text": text[mid:]},
         ]
-    )
+        jsonl = "\n".join(
+            json.dumps(r, ensure_ascii=False) for r in recs
+        ).encode()
+        decoded = decompress_zstd(ref_compress(jsonl))
+        parsed = [
+            json.loads(ln)
+            for ln in decoded.decode().split("\n")
+        ]
+        recon = "".join(p["text"] for p in parsed)
+        jsonl_ok = int(decoded == jsonl and recon == text)
+        # 2. multi-frame + skippable concatenation
+        skip = (
+            (0x184D2A50).to_bytes(4, "little")
+            + (4).to_bytes(4, "little")
+            + b"meta"
+        )
+        two = (
+            ref_compress(text[: len(text) // 2].encode())
+            + skip
+            + build_zstd_frames(text[len(text) // 2 :].encode())
+        )
+        multi_ok = int(decompress_zstd(two) == text.encode())
+        # 3. dispatch: .txt.zst through _extract_one
+        got, err = _extract_one(
+            f"{i}.txt.zst", ref_compress(text.encode())
+        )
+        disp_ok = int(err is None and got == text)
+        # 4. .tar.zst through the archive exploder
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w:") as tf:
+            for name, data in (
+                ("a.txt", text.encode()),
+                ("b.jsonl", jsonl),
+            ):
+                info = tarfile.TarInfo(name)
+                info.size = len(data)
+                tf.addfile(info, io.BytesIO(data))
+        tarzst = ref_compress(buf.getvalue())
+        members = _explode_one(f"{i}.tar.zst", tarzst)
+        tar_ok = (
+            len(members)
+            if all(m[3] is None for m in members)
+            else -1
+        )
+        # 5. corrupt frame isolates as an error row — a
+        # TRUNCATED frame is the deterministic corruption
+        # (the declared content size can never be met; a
+        # mid-frame bit flip could legally decode to altered
+        # bytes on a checksum-less frame)
+        bad = ref_compress(text.encode())[:-3]
+        _g, berr = _extract_one(f"{i}.txt.zst", bytes(bad))
+        bad_ok = int(_g is None and berr is not None)
+        return (
+            doc_id,
+            jsonl_ok,
+            multi_ok,
+            disp_ok,
+            tar_ok,
+            bad_ok,
+            len(text),
+            hashlib.sha256(
+                (got or "").encode()
+            ).hexdigest(),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import io
-        import json
-        import tarfile
-
-        import pyarrow as pa
-
-        from ..functions.zstd import build_zstd_frames, decompress_zstd
-        from ..operators.ingest import _explode_one, _extract_one
-
-        codec = pa.Codec("zstd", compression_level=3)
-
-        def ref_compress(data: bytes) -> bytes:
-            return codec.compress(data).to_pybytes()
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                # 1. .jsonl.zst member, reference-encoded (character
-                # midpoint split — JSON escapes any newlines, so the
-                # records reassemble by plain concatenation)
-                mid = len(text) // 2
-                recs = [
-                    {"id": i, "part": 0, "text": text[:mid]},
-                    {"id": i, "part": 1, "text": text[mid:]},
-                ]
-                jsonl = "\n".join(
-                    json.dumps(r, ensure_ascii=False) for r in recs
-                ).encode()
-                decoded = decompress_zstd(ref_compress(jsonl))
-                parsed = [
-                    json.loads(ln)
-                    for ln in decoded.decode().split("\n")
-                ]
-                recon = "".join(p["text"] for p in parsed)
-                jsonl_ok = int(decoded == jsonl and recon == text)
-                # 2. multi-frame + skippable concatenation
-                skip = (
-                    (0x184D2A50).to_bytes(4, "little")
-                    + (4).to_bytes(4, "little")
-                    + b"meta"
-                )
-                two = (
-                    ref_compress(text[: len(text) // 2].encode())
-                    + skip
-                    + build_zstd_frames(text[len(text) // 2 :].encode())
-                )
-                multi_ok = int(decompress_zstd(two) == text.encode())
-                # 3. dispatch: .txt.zst through _extract_one
-                got, err = _extract_one(
-                    f"{i}.txt.zst", ref_compress(text.encode())
-                )
-                disp_ok = int(err is None and got == text)
-                # 4. .tar.zst through the archive exploder
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w:") as tf:
-                    for name, data in (
-                        ("a.txt", text.encode()),
-                        ("b.jsonl", jsonl),
-                    ):
-                        info = tarfile.TarInfo(name)
-                        info.size = len(data)
-                        tf.addfile(info, io.BytesIO(data))
-                tarzst = ref_compress(buf.getvalue())
-                members = _explode_one(f"{i}.tar.zst", tarzst)
-                tar_ok = (
-                    len(members)
-                    if all(m[3] is None for m in members)
-                    else -1
-                )
-                # 5. corrupt frame isolates as an error row — a
-                # TRUNCATED frame is the deterministic corruption
-                # (the declared content size can never be met; a
-                # mid-frame bit flip could legally decode to altered
-                # bytes on a checksum-less frame)
-                bad = ref_compress(text.encode())[:-3]
-                _g, berr = _extract_one(f"{i}.txt.zst", bytes(bad))
-                bad_ok = int(_g is None and berr is not None)
-                rows.append(
-                    (
-                        doc_id,
-                        jsonl_ok,
-                        multi_ok,
-                        disp_ok,
-                        tar_ok,
-                        bad_ok,
-                        len(text),
-                        hashlib.sha256(
-                            (got or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)
 
 
 @register(
@@ -3500,89 +3298,59 @@ def ingest_sevenz_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     second coder path; a corrupt archive must isolate as ONE error
     row. Cross-engine validity is proven in tests/test_sevenzip.py
     (own archives read by libarchive, libarchive's solid
-    encoded-header archives read by us).
+    encoded-header archives read by us)."""
+    from ..functions.rtftext import build_rtf
+    from ..functions.sevenzip import build_7z
+    from ..operators.ingest import _explode_one, _extract_one
 
-    Scale shape: Arrow-batched narrow map over (doc_id, text), one
-    row per doc; member bytes never leave the partition."""
-    from collections.abc import Iterator
+    schema = (
+        "doc_id bigint, n_members bigint, txt_lossless bigint, "
+        "rtf_lossless bigint, store_lossless bigint, bad_isolated bigint, "
+        "n_chars bigint, text_sha string"
+    )
 
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("txt_lossless", T.LongType()),
-            T.StructField("rtf_lossless", T.LongType()),
-            T.StructField("store_lossless", T.LongType()),
-            T.StructField("bad_isolated", T.LongType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text_sha", T.StringType()),
+    def row(doc_id, text):
+        i = int(doc_id)
+        text = str(text)
+        members = [
+            ("doc.txt", text.encode()),
+            ("doc.rtf", build_rtf(text.split("\n"))),
         ]
-    )
+        arc = build_7z(members, compress=True)
+        exploded = _explode_one(f"{i}.7z", arc)
+        got = {}
+        for _p, member, content, err in exploded:
+            assert err is None, err
+            got[member], _e = _extract_one(member, content)
+        txt_ok = int(got.get("doc.txt") == text)
+        rtf_ok = int(got.get("doc.rtf") == text)
+        store = _explode_one(
+            f"{i}s.7z", build_7z(members, compress=False)
+        )
+        store_ok = int(
+            len(store) == 2
+            and store[0][2] == text.encode()
+            and all(r[3] is None for r in store)
+        )
+        bad = _explode_one(
+            f"{i}b.7z", b"7z\xbc\xaf\x27\x1cgarbage"
+        )
+        bad_ok = int(
+            len(bad) == 1
+            and bad[0][3] is not None
+            and bad[0][2] is None
+        )
+        return (
+            doc_id,
+            len(exploded),
+            txt_ok,
+            rtf_ok,
+            store_ok,
+            bad_ok,
+            len(text),
+            hashlib.sha256(
+                (got.get("doc.txt") or "").encode()
+            ).hexdigest(),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from ..functions.rtftext import build_rtf
-        from ..functions.sevenzip import build_7z
-        from ..operators.ingest import _explode_one, _extract_one
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                text = str(text)
-                members = [
-                    ("doc.txt", text.encode()),
-                    ("doc.rtf", build_rtf(text.split("\n"))),
-                ]
-                arc = build_7z(members, compress=True)
-                exploded = _explode_one(f"{i}.7z", arc)
-                got = {}
-                for _p, member, content, err in exploded:
-                    assert err is None, err
-                    got[member], _e = _extract_one(member, content)
-                txt_ok = int(got.get("doc.txt") == text)
-                rtf_ok = int(got.get("doc.rtf") == text)
-                store = _explode_one(
-                    f"{i}s.7z", build_7z(members, compress=False)
-                )
-                store_ok = int(
-                    len(store) == 2
-                    and store[0][2] == text.encode()
-                    and all(r[3] is None for r in store)
-                )
-                bad = _explode_one(
-                    f"{i}b.7z", b"7z\xbc\xaf\x27\x1cgarbage"
-                )
-                bad_ok = int(
-                    len(bad) == 1
-                    and bad[0][3] is not None
-                    and bad[0][2] is None
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        len(exploded),
-                        txt_ok,
-                        rtf_ok,
-                        store_ok,
-                        bad_ok,
-                        len(text),
-                        hashlib.sha256(
-                            (got.get("doc.txt") or "").encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)

@@ -10,6 +10,8 @@ acceptable shape for a 100 TB pre-filter pass.
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,7 +19,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hex_to_u32_sql, sha_hash32, sha_hash32_sql
 from ..functions.numeric import davg, davg_sql
 from ..registry import register
-from ..sources.readers import load_table, spread_input
+from ..sources.readers import load_table, per_doc_map, spread_input
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for", "on", "with")
 
@@ -3328,67 +3330,40 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form from the raw text, and the sha256 of the extracted
     body must match it — one leaked nav token or swallowed word
     hash-fails. Links are counted only outside boilerplate (the nav's
-    own anchor must NOT count).
+    own anchor must NOT count)."""
+    import html as html_mod
 
-    Scale shape: one Arrow-batched narrow map (parse where the rows
-    live); only the 6-column fact row leaves the executor."""
-    from collections.abc import Iterator
+    from ..functions.htmltext import extract_main_text
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("text_digest", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("n_paragraphs", T.LongType()),
-            T.StructField("n_links", T.LongType()),
-        ]
+    schema = (
+        "doc_id bigint, title string, text_digest string, n_chars bigint, "
+        "n_paragraphs bigint, n_links bigint"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import html as html_mod
+    def row(doc_id, text):
+        i = int(doc_id)
+        words = [w for w in (text or "").split(" ") if w]
+        k = (len(words) + 1) // 2
+        first = html_mod.escape(" ".join(words[:k]))
+        second = html_mod.escape(" ".join(words[k:]))
+        links = '<a href="#"></a>' * (i % 3)
+        page = (
+            f"<html><head><title>Doc {i}</title>"
+            "<style>p{color:red}</style></head>"
+            "<body><nav>BOILER <a href='#'>skip</a>"
+            "<p>fake para</p></nav>"
+            f"<p>{first}</p><p>{second}</p>{links}"
+            "<script>var a='<p>evil</p>';</script>"
+            "<footer>MORE BOILER</footer></body></html>"
+        )
+        r = extract_main_text(page)
+        return (
+            doc_id,
+            r["title"],
+            hashlib.sha256(r["text"].encode()).hexdigest(),
+            len(r["text"]),
+            r["n_paragraphs"],
+            r["n_links"],
+        )
 
-        from ..functions.htmltext import extract_main_text
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(doc_id)
-                words = [w for w in (text or "").split(" ") if w]
-                k = (len(words) + 1) // 2
-                first = html_mod.escape(" ".join(words[:k]))
-                second = html_mod.escape(" ".join(words[k:]))
-                links = '<a href="#"></a>' * (i % 3)
-                page = (
-                    f"<html><head><title>Doc {i}</title>"
-                    "<style>p{color:red}</style></head>"
-                    "<body><nav>BOILER <a href='#'>skip</a>"
-                    "<p>fake para</p></nav>"
-                    f"<p>{first}</p><p>{second}</p>{links}"
-                    "<script>var a='<p>evil</p>';</script>"
-                    "<footer>MORE BOILER</footer></body></html>"
-                )
-                r = extract_main_text(page)
-                rows.append(
-                    (
-                        doc_id,
-                        r["title"],
-                        hashlib.sha256(r["text"].encode()).hexdigest(),
-                        len(r["text"]),
-                        r["n_paragraphs"],
-                        r["n_links"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.select("doc_id", "text")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return per_doc_map(spark, sf_dir, ("doc_id", "text"), schema, row)

@@ -68,3 +68,12 @@ def test_conf_bytes_parses_suffixed_values():
     assert readers._conf_bytes("128m") == 128 * (1 << 20)
     assert readers._conf_bytes("128MB") == 128 * (1 << 20)
     assert readers._conf_bytes("1g") == 1 << 30
+
+
+def test_unknown_size_is_not_shuffled(spark):
+    """A table whose size cannot be probed (a remote URI such as
+    s3a:// or hdfs://) is treated as large: spread_input must not
+    round-robin the whole corpus."""
+    df = readers.load_table(spark, SF, "documents").select("doc_id", "text")
+    assert readers._path_bytes("s3a://bucket/sf/documents.parquet") is None
+    assert readers.spread_input(df, "s3a://bucket/sf", "documents") is df

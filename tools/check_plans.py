@@ -5,15 +5,20 @@ executes it — the properties that decide whether the same code survives
 a 100 TB input. Run:
 
     python tools/check_plans.py          # assert + write PLANS.md
+    python tools/check_plans.py --sweep  # audit every registered query
+    python tools/check_plans.py --sweep --dump plans.json
+                                         # ... and dump normalized plans
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from articulation_vector_db_api_spark.registry import load_all  # noqa: E402
 from articulation_vector_db_api_spark.session import get_spark  # noqa: E402
@@ -1134,6 +1139,17 @@ def barrier_violations(plan: str) -> list[str]:
     return out
 
 
+def normalize_plan(plan: str) -> str:
+    """A formatted plan without what differs between two builds of the
+    same query: expression ids (``#12``, ``#12L``) and ``[plan_id=N]``
+    tags, which count up per session, the Spark application id in
+    scratch-table paths, and the checkout directory. The dumps of two
+    checkouts then compare byte for byte."""
+    plan = re.sub(r"\[plan_id=\d+\]", "", re.sub(r"#\d+L?", "", plan))
+    plan = re.sub(r"local-\d+", "local-<app>", plan)
+    return plan.replace(ROOT, "<repo>")
+
+
 def main() -> int:
     import sys as _sys
 
@@ -1150,15 +1166,27 @@ def main() -> int:
 
     if "--sweep" in _sys.argv:
         # global audit: every registered query's plan, not just the
-        # per-query contracts below
+        # per-query contracts below. ``--dump PATH`` also writes each
+        # query's normalized plan, output schema and oracle SQL as JSON,
+        # so the dumps of two checkouts can be diffed for plan identity.
+        dump_path = None
+        if "--dump" in _sys.argv:
+            dump_path = _sys.argv[_sys.argv.index("--dump") + 1]
+        dump = {}
         swept = bad_n = 0
         for name, q in sorted(registry.items()):
             try:
-                plan = explain(q.fn(spark, SF))
+                df = q.fn(spark, SF)
+                plan = explain(df)
             except Exception as exc:  # noqa: BLE001
                 print(f"FAIL   {name}: plan error {type(exc).__name__}")
                 bad_n += 1
                 continue
+            dump[name] = {
+                "plan": normalize_plan(plan),
+                "schema": df.schema.simpleString(),
+                "oracle": q.oracle and q.oracle.replace(ROOT, "<repo>"),
+            }
             hits = [f for f in FORBIDDEN_EVERYWHERE if re.search(f, plan)]
             if name in BARRIER_QUERIES:
                 hits += barrier_violations(plan)
@@ -1169,6 +1197,10 @@ def main() -> int:
         print(f"sweep: {swept - bad_n}/{swept} plans free of "
               f"{list(FORBIDDEN_EVERYWHERE)} + barrier-shape violations "
               f"({len(BARRIER_QUERIES)} barrier pins)")
+        if dump_path:
+            with open(dump_path, "w") as f:
+                json.dump(dump, f, indent=1, sort_keys=True)
+            print(f"dump: {len(dump)} plans -> {dump_path}")
         return 1 if bad_n else 0
 
     frames = (
