@@ -5,6 +5,11 @@ GET /stats, GET /health (/root/reference/main.py:219-360); this module
 exposes the same request/response shapes as plain Python callables over
 the engine, so an HTTP tier (or a notebook) can swap in directly.
 Response dict shapes mirror the Pydantic models (main.py:81-103).
+
+As in the reference, where /ingest upserts into the live index and the
+next query sees the new vectors (main.py:163-172), an ingest into the
+served chunk table updates the driver-resident serving index from the
+rows it has just written; it does not re-read the table.
 """
 
 from __future__ import annotations
@@ -18,7 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from .operators.search import (
     DEFAULT_TOP_K,
     ServingIndex,
+    merge_serving_index,
     open_serving_index,
+    read_chunk_table,
+    serving_partitions,
+    table_files,
     topk_search,
     topk_search_cached,
 )
@@ -39,12 +48,24 @@ class EngineAPI:
     _serving: DataFrame | ServingIndex | None = field(
         default=None, repr=False, compare=False
     )
+    # table_files(chunk_table) as of the data _serving holds: taken
+    # before a warm reads the table and after an ingest merges a batch.
+    # An ingest whose pre-write listing differs (a write, /compact or a
+    # deletion outside EngineAPI.ingest) re-warms instead of merging.
+    _serving_files: dict | None = field(
+        default=None, repr=False, compare=False
+    )
     # serve() runs this API under ThreadingHTTPServer: without the
     # lock, two /search threads racing a post-ingest invalidation both
     # see _serving None and both warm() — one build wins the slot, the
     # loser's persisted projection leaks in the Spark cache forever
     # (r11 self-review finding)
     _warm_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
+    # one ingest into the served table at a time, so each merge starts
+    # from the index of the table as the previous ingest left it
+    _ingest_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False, compare=False
     )
 
@@ -57,10 +78,13 @@ class EngineAPI:
             if self.chunk_table is None:
                 raise ValueError("warm() needs a chunk_table path")
             self._invalidate_locked()
-            self._serving = open_serving_index(
-                self.spark, self.chunk_table
-            )
+            self._warm_locked()
         return self
+
+    def _warm_locked(self) -> None:
+        files = table_files(self.chunk_table)  # before the read: see above
+        self._serving = open_serving_index(self.spark, self.chunk_table)
+        self._serving_files = files
 
     def _invalidate(self) -> None:
         with self._warm_lock:
@@ -70,6 +94,7 @@ class EngineAPI:
         if isinstance(self._serving, DataFrame):
             self._serving.unpersist()
         self._serving = None
+        self._serving_files = None
 
     def _topk(self, query: str, top_k: int) -> DataFrame | list:
         if self.chunk_table and (
@@ -81,9 +106,7 @@ class EngineAPI:
                     if self._serving is None:  # double-checked: one build
                         if self.chunk_table is None:
                             raise ValueError("warm() needs a chunk_table")
-                        self._serving = open_serving_index(
-                            self.spark, self.chunk_table
-                        )
+                        self._warm_locked()
                     serving = self._serving
             return topk_search_cached(serving, query, top_k)
         return topk_search(self.spark, self.data_dir, query, top_k)
@@ -123,13 +146,11 @@ class EngineAPI:
         """POST /ingest twin (main.py:255-311): IngestResponse shape."""
         from .operators.ingest import ingest_corpus
 
-        result = ingest_corpus(self.spark, corpus_dir, table_path, glob)
         if self.chunk_table and table_path == self.chunk_table:
-            # the serving table changed under us: drop the cached
-            # projection (next /search re-warms) and flush Spark's
-            # file-listing cache for the path
-            self._invalidate()
-            self.spark.catalog.refreshByPath(table_path)
+            with self._ingest_lock:
+                result = self._ingest_served(corpus_dir, table_path, glob)
+        else:
+            result = ingest_corpus(self.spark, corpus_dir, table_path, glob)
         failed = result["files_failed"]
         suffix = f" ({failed} files failed)" if failed else ""
         return {
@@ -140,11 +161,52 @@ class EngineAPI:
             "pdfs_processed": result["sources_processed"],
         }
 
+    def _ingest_served(self, corpus_dir: str, table_path: str, glob: str) -> dict:
+        """Ingest into the served table and keep the serving index in
+        step. The written batch is merged into the current index when
+        that index is a :class:`ServingIndex` of the table's present
+        files (an absent table is an empty one) and the merged table
+        still fits one partition. Otherwise the index is dropped and the
+        next /search re-warms it from the table."""
+        from .operators.ingest import ingest_corpus
+
+        files = table_files(table_path)
+        with self._warm_lock:
+            if files == {}:  # no table yet: the batch is all of it
+                base = ServingIndex.empty()
+            elif (files is not None and files == self._serving_files
+                  and isinstance(self._serving, ServingIndex)):
+                base = self._serving
+            else:
+                base = None
+        result = ingest_corpus(
+            self.spark, corpus_dir, table_path, glob,
+            serving_batch=base is not None,
+        )
+        batch = result.pop("serving_batch", None)
+        # refresh Spark's file-listing cache for the path either way
+        self.spark.catalog.refreshByPath(table_path)
+        after = table_files(table_path) if batch is not None else None
+        if serving_partitions(after) == 1:
+            merged = merge_serving_index(base, batch)
+            with self._warm_lock:
+                self._invalidate_locked()
+                self._serving, self._serving_files = merged, after
+            # every row ingest writes has text, so the index holds them all
+            result["ingested_count"] = len(merged.ids)
+        else:
+            self._invalidate()
+            if result["ingested_count"] is None:
+                result["ingested_count"] = read_chunk_table(
+                    self.spark, table_path
+                ).count()
+        return result
+
     def stats(self, table_path: str) -> dict:
         """GET /stats twin (main.py:340-360)."""
         from .operators.stats import index_stats
 
-        chunks = self.spark.read.parquet(table_path)
+        chunks = read_chunk_table(self.spark, table_path)
         return {"index_name": table_path, "stats": index_stats(chunks)}
 
     def health(self, table_path: str) -> dict:

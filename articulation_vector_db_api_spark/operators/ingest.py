@@ -282,12 +282,26 @@ def write_chunk_table(chunks: DataFrame, path: str) -> None:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def ingest_corpus(spark: SparkSession, corpus_dir: str, table_path: str, glob: str = "*") -> dict:
+def ingest_corpus(
+    spark: SparkSession,
+    corpus_dir: str,
+    table_path: str,
+    glob: str = "*",
+    serving_batch: bool = False,
+) -> dict:
     """End-to-end ingest (O1-O7). Returns the reference's response
     shape {ingested_count, files_processed, files_failed}
     (main.py:304-311); raises only if EVERY file failed
-    (main.py:298-302)."""
+    (main.py:298-302).
+
+    With ``serving_batch`` the result also holds ``serving_batch``: the
+    written rows' serving projection (``collect_serving_index``, one
+    small job over the cached extraction), which a caller holding the
+    table's serving index folds into it. When that projection exists the
+    table is not counted (``ingested_count`` is None): the folded index
+    knows the row count."""
     from ..sources.readers import load_binary_corpus
+    from .search import collect_serving_index, read_chunk_table
 
     corpus = load_binary_corpus(spark, corpus_dir, glob)
     extracted = extract_text(corpus).cache()
@@ -308,8 +322,11 @@ def ingest_corpus(spark: SparkSession, corpus_dir: str, table_path: str, glob: s
             ]
             raise RuntimeError(f"all {n_fail} files failed ingestion: {failures}")
         chunks = build_chunk_rows(extracted)
+        batch = collect_serving_index(chunks) if serving_batch else None
         write_chunk_table(chunks, table_path)
-        n_chunks = spark.read.parquet(table_path).count()
+        n_chunks = (
+            read_chunk_table(spark, table_path).count() if batch is None else None
+        )
         # The reference's IngestResponse carries the processed titles
         # (main.py:311). At smoke scale every title fits, but the
         # serving path must not collect an unbounded list for a 40M-file
@@ -324,13 +341,16 @@ def ingest_corpus(spark: SparkSession, corpus_dir: str, table_path: str, glob: s
             .collect()
         )
         sources = [r.source for r in listed]
-        return {
+        result = {
             "ingested_count": n_chunks,
             "files_processed": n_ok,
             "files_failed": n_fail,
             "sources_processed": sources,
             "sources_truncated": max(0, n_ok - len(sources)),
         }
+        if serving_batch:
+            result["serving_batch"] = batch
+        return result
     finally:
         extracted.unpersist()
 

@@ -26,6 +26,7 @@ import math
 import os
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
+from urllib.parse import urlparse
 
 import numpy as np
 
@@ -46,7 +47,7 @@ def query_vector_literals(query: str, dim: int | None = None) -> tuple[list[floa
     SQL produce bit-identical doubles here (same IEEE ops in the same
     order — functions/embedding.py), so both the Spark plan and the
     DuckDB oracle inline the exact same literals."""
-    qv = hash_embedding_py(query)[: (dim or None)]
+    qv = hash_embedding_py(query, dim) if dim else hash_embedding_py(query)
     qnorm = math.sqrt(sum(x * x for x in qv))
     return qv, qnorm
 
@@ -180,6 +181,20 @@ def _pattern_topk(indexed: DataFrame, query: str, top_k: int) -> DataFrame:
     )
 
 
+# The chunk table as operators/ingest.py writes it, partitioned by
+# ``source``. Declared because Spark infers a partition column's type
+# from its values: sources ``2024`` and ``0042`` would read back as the
+# integers 2024 and 42.
+CHUNK_TABLE_SCHEMA = (
+    "id string, pos int, text string, embedding array<double>, source string"
+)
+
+
+def read_chunk_table(spark: SparkSession, table_path: str) -> DataFrame:
+    """The stored chunk table, with ``source`` always a string."""
+    return spark.read.schema(CHUNK_TABLE_SCHEMA).parquet(table_path)
+
+
 def _indexed_patterns(chunks: DataFrame) -> DataFrame:
     """Stored chunk table -> the serving projection (id, source, text,
     pattern). Scoring slices the stored 1024-dim embedding down to its
@@ -188,6 +203,15 @@ def _indexed_patterns(chunks: DataFrame) -> DataFrame:
     return chunks.filter(F.length("text") > 0).select(
         "id", "source", "text",
         F.slice(F.col("embedding"), 1, PATTERN_DIM).alias("pattern"),
+    )
+
+
+def _serving_projection(chunks: DataFrame) -> DataFrame:
+    """:func:`_indexed_patterns` plus ``pnorm``. The pattern norm is
+    query-independent: computed once here, every request's fold is
+    dot-only (half the per-row work)."""
+    return _indexed_patterns(chunks).withColumn(
+        "pnorm", l2_norm(F.col("pattern"))
     )
 
 
@@ -205,7 +229,7 @@ def topk_search_indexed(
     partitions entirely; serving tiers that issue many queries should
     ``open_serving_index`` once instead and search the cached
     projection."""
-    chunks = spark.read.parquet(table_path)
+    chunks = read_chunk_table(spark, table_path)
     return _pattern_topk(_indexed_patterns(chunks), query, top_k)
 
 
@@ -221,52 +245,97 @@ class ServingIndex:
     patterns: np.ndarray  # (PATTERN_DIM, n) float64, one row per dim
     pnorm: np.ndarray  # (n,) float64, l2_norm(pattern) computed by Spark
 
+    @classmethod
+    def empty(cls) -> ServingIndex:
+        return cls([], [], [], np.empty((PATTERN_DIM, 0)), np.empty(0))
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file index skips these names: ``_temporary``,
+    ``_SUCCESS``, ``.crc`` checksums (a ``_`` name holding ``=`` is a
+    partition directory and is read)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def table_files(path: str) -> dict[str, tuple[int, int]] | None:
+    """The data files Spark reads for a local table, as ``{relpath:
+    (size, mtime_ns)}``, skipping hidden files and directories the way
+    Spark does. An absent local path is an empty table, ``{}``. None
+    when the files are unknown here: a URI (``file://``, ``s3a://``),
+    a single file, or a listing that raced a writer."""
+    if urlparse(path).scheme:
+        return None
+    if not os.path.lexists(path):
+        return {}
+    if not os.path.isdir(path):
+        return None
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    files = {}
+    try:
+        for root, dirs, names in os.walk(path, onerror=fail):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for name in names:
+                if not _hidden(name):
+                    full = os.path.join(root, name)
+                    st = os.stat(full)
+                    files[os.path.relpath(full, path)] = (
+                        st.st_size, st.st_mtime_ns,
+                    )
+    except OSError:
+        return None
+    return files
+
+
+PARTITION_BYTES = 64 << 20  # source parquet per cached serving partition
+
+
+def serving_partitions(
+    files: dict[str, tuple[int, int]] | None, partition_bytes: int | None = None
+) -> int | None:
+    """Cached partitions for a table of ``files`` (:func:`table_files`):
+    one per ``partition_bytes`` (default :data:`PARTITION_BYTES`) of
+    data, at least one; None when the files are unknown."""
+    if files is None:
+        return None
+    total = sum(size for size, _mtime in files.values())
+    return max(1, -(-total // (partition_bytes or PARTITION_BYTES)))
+
 
 def open_serving_index(
-    spark: SparkSession, table_path: str, partition_bytes: int = 64 << 20
+    spark: SparkSession, table_path: str, partition_bytes: int | None = None
 ) -> DataFrame | ServingIndex:
     """O15 bootstrap pre-warm: read the stored chunk table ONCE and
     project the serving columns, so the steady-state read path never
     re-opens parquet footers per request (the reference holds its
     Pinecone index handle open the same way, main.py:60-76).
 
-    Partitioning is sized by DATA volume (~64 MB of source parquet per
-    cached partition), not by the table's file count: a serving tier
-    runs many concurrent top-k jobs, and per-task scheduling overhead
-    on dozens of tiny cached partitions dominates latency long before
-    compute does. At 100 TB the same rule yields thousands of
-    partitions — still correct.
+    Partitioning is sized by DATA volume (:func:`serving_partitions`,
+    ~64 MB of source parquet per cached partition), not by the table's
+    file count: a serving tier runs many concurrent top-k jobs, and
+    per-task scheduling overhead on dozens of tiny cached partitions
+    dominates latency long before compute does. At 100 TB the same rule
+    yields thousands of partitions — still correct.
 
     When that rule gives ONE partition, every top-k plan would be a
     single task anyway, and the per-job floor, plan build and collect
     dominate it. The projection is then pulled into the driver with
     one ``toArrow`` job and returned as a :class:`ServingIndex`;
     requests score it in-process and start no Spark job (batch build in
-    Spark, local top-k, as in REPOSE). Larger tables, and tables whose
+    Spark, local top-k, as in REPOSE). ``EngineAPI.ingest`` then folds
+    each batch it writes into that index (:func:`merge_serving_index`)
+    instead of calling this again. Larger tables, and tables whose
     size is unknown (not a local directory), stay a persisted
     DataFrame. MEMORY_AND_DISK: on a large cluster a 100 TB chunk table
     only partially fits executor memory — the overflow serves from
     local disk, never recomputed from source."""
     from pyspark import StorageLevel
 
-    chunks = spark.read.parquet(table_path)
-    n_parts = None
-    if os.path.isdir(table_path):  # os.walk yields nothing for a URI
-        try:
-            bytes_total = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(table_path)
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-            n_parts = max(1, -(-bytes_total // partition_bytes))
-        except OSError:
-            pass  # listing raced a writer: keep the scan's partitioning
-    # the pattern norm is query-independent: compute it once at warm
-    # time so every request's fold is dot-only (half the per-row work)
-    df = _indexed_patterns(chunks).withColumn(
-        "pnorm", l2_norm(F.col("pattern"))
-    )
+    chunks = read_chunk_table(spark, table_path)
+    n_parts = serving_partitions(table_files(table_path), partition_bytes)
+    df = _serving_projection(chunks)
     if n_parts == 1:
         local = _driver_index(df)
         if local is not None:
@@ -276,6 +345,33 @@ def open_serving_index(
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()  # materialize now: the first request must not pay the scan
     return df
+
+
+def collect_serving_index(chunks: DataFrame) -> ServingIndex | None:
+    """Chunk rows, as ingest writes them, as a :class:`ServingIndex`:
+    their serving projection in one ``toArrow`` job; None as in
+    :func:`_driver_index`."""
+    return _driver_index(_serving_projection(chunks))
+
+
+def merge_serving_index(base: ServingIndex, batch: ServingIndex) -> ServingIndex:
+    """``base`` after ``batch`` was written into its table: the base rows
+    of every source in the batch are dropped and the batch rows
+    appended, as write_chunk_table's dynamic partition overwrite
+    replaces those sources' partitions. ``batch`` must hold every row
+    written: the chunker never emits an empty chunk, so the serving
+    projection's text filter drops none of ingest's rows."""
+    replaced = set(batch.sources)
+    keep = [i for i, s in enumerate(base.sources) if s not in replaced]
+    return ServingIndex(
+        ids=[base.ids[i] for i in keep] + batch.ids,
+        sources=[base.sources[i] for i in keep] + batch.sources,
+        texts=[base.texts[i] for i in keep] + batch.texts,
+        patterns=np.concatenate(
+            [base.patterns[:, keep], batch.patterns], axis=1
+        ),
+        pnorm=np.concatenate([base.pnorm[keep], batch.pnorm]),
+    )
 
 
 def _driver_index(df: DataFrame) -> ServingIndex | None:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .search import read_chunk_table
+
 
 def validate_query(query: str) -> str:
     """Empty-query guard (O11, main.py:317-318)."""
@@ -39,8 +41,7 @@ def health(spark: SparkSession, table_path: str) -> dict:
     """Three-state health report (O13, main.py:228-253): healthy /
     degraded-with-message, never raises."""
     try:
-        df = spark.read.parquet(table_path)
-        n = df.count()
+        n = read_chunk_table(spark, table_path).count()
         return {"status": "healthy", "index": table_path, "vector_count": n}
     except Exception as e:  # noqa: BLE001 - health endpoints must not raise
         return {

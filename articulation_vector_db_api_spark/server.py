@@ -21,7 +21,9 @@ Error shape mirrors FastAPI's ``HTTPException``: a JSON body
 Design: the serving tier is deliberately thin — every endpoint is one
 ``EngineAPI`` call. A warmed /search over a table that fits one cached
 partition runs no Spark job: it scores the driver-resident serving
-index (``operators.search.open_serving_index``). Other endpoints, and
+index (``operators.search.open_serving_index``), and /ingest into the
+served table merges the rows it writes into that index, so the next
+/search sees them without re-reading the table. Other endpoints, and
 /search over larger tables, run short Spark jobs. ``ThreadingHTTPServer``
 gives request concurrency; Spark sessions are thread-safe for job
 submission, and the scheduler (FAIR at deployment) interleaves the
@@ -175,9 +177,9 @@ def serve(
 
     The served /search reads the configured chunk table (the
     reference's steady-state: queries hit the persisted index,
-    main.py:176-216) through the API's pre-warmed cached projection;
-    until an ingest creates the table, searches fall back to the
-    API's raw-documents path."""
+    main.py:176-216) through the API's pre-warmed serving index, which
+    each /ingest into the table updates; until an ingest creates the
+    table, searches fall back to the API's raw-documents path."""
     if api.chunk_table is None:
         api.chunk_table = cfg.table_path
         import os

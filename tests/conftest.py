@@ -25,3 +25,18 @@ def spark() -> SparkSession:
     )
     yield s
     s.stop()
+
+
+def assert_same_serving_index(a, b) -> None:
+    """Two driver-resident serving indexes hold the same rows: ids,
+    sources and texts keyed by id, patterns and pnorm bit for bit."""
+    from articulation_vector_db_api_spark.operators.search import ServingIndex
+
+    assert isinstance(a, ServingIndex) and isinstance(b, ServingIndex)
+    oa = sorted(range(len(a.ids)), key=a.ids.__getitem__)
+    ob = sorted(range(len(b.ids)), key=b.ids.__getitem__)
+    for col in ("ids", "sources", "texts"):
+        xa, xb = getattr(a, col), getattr(b, col)
+        assert [xa[i] for i in oa] == [xb[i] for i in ob], col
+    assert a.patterns[:, oa].tobytes() == b.patterns[:, ob].tobytes()
+    assert a.pnorm[oa].tobytes() == b.pnorm[ob].tobytes()

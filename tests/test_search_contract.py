@@ -19,7 +19,7 @@ from articulation_vector_db_api_spark.operators.search import (
 )
 from articulation_vector_db_api_spark.operators.stats import validate_query
 from articulation_vector_db_api_spark.sources.readers import load_table
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_same_serving_index
 
 SF_MEDIUM = "/root/testdata/sf0.01"
 SF_LARGE = "/root/testdata/sf0.1"
@@ -82,8 +82,8 @@ def test_context_format(spark):
 def test_serving_index_parity_and_invalidation(spark, tmp_path):
     """r11: the pre-warmed serving path (open_serving_index +
     topk_search_cached) returns bit-identical results to the per-call
-    indexed path, and EngineAPI invalidates the cache when the table
-    is re-ingested underneath it."""
+    indexed path, and an EngineAPI ingest into the table leaves the
+    index equal to a fresh warm of it."""
     from articulation_vector_db_api_spark.api import EngineAPI
     from articulation_vector_db_api_spark.operators.ingest import write_chunk_table
     from articulation_vector_db_api_spark.operators.search import (
@@ -109,16 +109,17 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     resp = api.search("transfer credits", 3)
     assert [(c["id"], c["score"]) for c in resp["chunks"]] == a[:3]
     assert api._serving is not None  # lazily warmed
-    # re-ingesting the serving table drops the cached projection
+    # re-ingesting the serving table merges the batch into the index
     corpus = tmp_path / "docs"
     corpus.mkdir()
     (corpus / "fresh.txt").write_text("entirely new corpus text " * 120)
     api.ingest(str(corpus), table, glob="*.txt")
-    assert api._serving is None
+    assert "fresh" in api._serving.sources
+    assert_same_serving_index(api._serving, open_serving_index(spark, table))
     resp2 = api.search("entirely new corpus", 3)
     assert resp2["total_results"] > 0
-    assert api._serving is not None  # re-warmed over the upserted table
-    # the re-warm sees the upserted partition
+    assert api._serving is not None
+    # the index holds the upserted partition
     assert "fresh" in api._serving.sources
     api._invalidate()
 
