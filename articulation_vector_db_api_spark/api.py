@@ -23,10 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from .operators.search import (
     DEFAULT_TOP_K,
     ServingIndex,
-    merge_serving_index,
     open_serving_index,
     read_chunk_table,
-    serving_partitions,
+    table_absent,
     table_files,
     topk_search,
     topk_search_cached,
@@ -170,37 +169,33 @@ class EngineAPI:
         next /search re-warms it from the table."""
         from .operators.ingest import ingest_corpus
 
-        files = table_files(table_path)
         with self._warm_lock:
-            if files == {}:  # no table yet: the batch is all of it
-                base = ServingIndex.empty()
-            elif (files is not None and files == self._serving_files
-                  and isinstance(self._serving, ServingIndex)):
-                base = self._serving
-            else:
-                base = None
+            base = self._merge_base_locked(table_path)
         result = ingest_corpus(
-            self.spark, corpus_dir, table_path, glob,
-            serving_batch=base is not None,
+            self.spark, corpus_dir, table_path, glob, serving_base=base
         )
-        batch = result.pop("serving_batch", None)
+        serving = result.pop("serving", None)
         # refresh Spark's file-listing cache for the path either way
         self.spark.catalog.refreshByPath(table_path)
-        after = table_files(table_path) if batch is not None else None
-        if serving_partitions(after) == 1:
-            merged = merge_serving_index(base, batch)
-            with self._warm_lock:
-                self._invalidate_locked()
-                self._serving, self._serving_files = merged, after
-            # every row ingest writes has text, so the index holds them all
-            result["ingested_count"] = len(merged.ids)
-        else:
-            self._invalidate()
-            if result["ingested_count"] is None:
-                result["ingested_count"] = read_chunk_table(
-                    self.spark, table_path
-                ).count()
+        with self._warm_lock:
+            self._invalidate_locked()
+            if serving is not None:
+                self._serving_files, self._serving = serving
         return result
+
+    def _merge_base_locked(self, table_path: str) -> ServingIndex | None:
+        """The index an ingest into ``table_path`` merges into: an empty
+        one when there is no table yet, the current index when it is a
+        :class:`ServingIndex` of the table's present files, else None.
+        Only the second case lists the table, so a write to a table the
+        merge cannot serve (a persisted DataFrame index) walks nothing."""
+        if table_absent(table_path):  # the batch is all of the table
+            return ServingIndex.empty()
+        if isinstance(self._serving, ServingIndex):
+            files = table_files(table_path)
+            if files is not None and files == self._serving_files:
+                return self._serving
+        return None
 
     def stats(self, table_path: str) -> dict:
         """GET /stats twin (main.py:340-360)."""

@@ -23,6 +23,7 @@ shuffle.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.chunking import chunk_documents
-from ..functions.embedding import hash_embedding_from_hex
+from ..functions.embedding import EMBEDDING_DIM, hash_embedding_from_hex
+
+if TYPE_CHECKING:
+    from .search import ServingIndex
 
 # Cap on the IngestResponse's per-title list (main.py:311 names every
 # title; fine for a 40-PDF smoke corpus, unbounded for a 40M-file one).
@@ -241,10 +245,11 @@ def extract_text(corpus: DataFrame) -> DataFrame:
     return corpus.select("path", "content").mapInPandas(batches, EXTRACT_SCHEMA)
 
 
-def build_chunk_rows(extracted: DataFrame) -> DataFrame:
+def build_chunk_rows(extracted: DataFrame, dim: int = EMBEDDING_DIM) -> DataFrame:
     """Chunk + embed successfully-extracted docs into upsertable rows:
     (id = {source}_{pos}, source, pos, text, embedding) — the
-    reference's item shape (main.py:158-170)."""
+    reference's item shape (main.py:158-170). A smaller ``dim`` gives
+    the leading ``dim`` values of the same embedding."""
     ok = extracted.filter(F.col("error").isNull() & (F.length("text") > 0))
     chunks = chunk_documents(ok, id_col="source", text_col="text")
     return (
@@ -254,7 +259,7 @@ def build_chunk_rows(extracted: DataFrame) -> DataFrame:
             "source",
             "pos",
             F.col("chunk_text").alias("text"),
-            hash_embedding_from_hex(F.col("_hex")).alias("embedding"),
+            hash_embedding_from_hex(F.col("_hex"), dim).alias("embedding"),
         )
     )
 
@@ -287,21 +292,30 @@ def ingest_corpus(
     corpus_dir: str,
     table_path: str,
     glob: str = "*",
-    serving_batch: bool = False,
+    serving_base: ServingIndex | None = None,
 ) -> dict:
     """End-to-end ingest (O1-O7). Returns the reference's response
     shape {ingested_count, files_processed, files_failed}
     (main.py:304-311); raises only if EVERY file failed
     (main.py:298-302).
 
-    With ``serving_batch`` the result also holds ``serving_batch``: the
-    written rows' serving projection (``collect_serving_index``, one
-    small job over the cached extraction), which a caller holding the
-    table's serving index folds into it. When that projection exists the
-    table is not counted (``ingested_count`` is None): the folded index
-    knows the row count."""
+    ``serving_base`` is a driver-resident serving index of the table as
+    it stood before this write (an empty one for an absent table). With
+    it, the result also holds ``serving``: ``(files, index)``, the
+    table's :func:`table_files` after the write and ``serving_base``
+    with the written rows merged in (:func:`merge_serving_index`), or
+    None when the table no longer fits one serving partition or a
+    pattern is malformed. ``ingested_count`` is then the merged index's
+    length instead of a count of the table."""
     from ..sources.readers import load_binary_corpus
-    from .search import collect_serving_index, read_chunk_table
+    from .search import (
+        PATTERN_DIM,
+        collect_serving_index,
+        merge_serving_index,
+        read_chunk_table,
+        serving_partitions,
+        table_files,
+    )
 
     corpus = load_binary_corpus(spark, corpus_dir, glob)
     extracted = extract_text(corpus).cache()
@@ -321,11 +335,23 @@ def ingest_corpus(
                 for r in extracted.filter("error IS NOT NULL").limit(3).collect()
             ]
             raise RuntimeError(f"all {n_fail} files failed ingestion: {failures}")
-        chunks = build_chunk_rows(extracted)
-        batch = collect_serving_index(chunks) if serving_batch else None
-        write_chunk_table(chunks, table_path)
+        write_chunk_table(build_chunk_rows(extracted), table_path)
+        serving = None
+        if serving_base is not None:
+            files = table_files(table_path)
+            # The whole table, so the batch too, fits one partition:
+            # only then may the batch's rows reach the driver. They are
+            # rebuilt from the cached extraction with just the pattern.
+            if serving_partitions(files) == 1:
+                batch = collect_serving_index(
+                    build_chunk_rows(extracted, PATTERN_DIM)
+                )
+                if batch is not None:
+                    serving = files, merge_serving_index(serving_base, batch)
+        # every row ingest writes has text, so the index holds them all
         n_chunks = (
-            read_chunk_table(spark, table_path).count() if batch is None else None
+            len(serving[1].ids) if serving is not None
+            else read_chunk_table(spark, table_path).count()
         )
         # The reference's IngestResponse carries the processed titles
         # (main.py:311). At smoke scale every title fits, but the
@@ -348,8 +374,8 @@ def ingest_corpus(
             "sources_processed": sources,
             "sources_truncated": max(0, n_ok - len(sources)),
         }
-        if serving_batch:
-            result["serving_batch"] = batch
+        if serving_base is not None:
+            result["serving"] = serving
         return result
     finally:
         extracted.unpersist()

@@ -257,17 +257,21 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
+def table_absent(path: str) -> bool:
+    """Nothing at a local ``path``: an empty table. A URI is never
+    known to be absent here."""
+    return not urlparse(path).scheme and not os.path.lexists(path)
+
+
 def table_files(path: str) -> dict[str, tuple[int, int]] | None:
     """The data files Spark reads for a local table, as ``{relpath:
     (size, mtime_ns)}``, skipping hidden files and directories the way
     Spark does. An absent local path is an empty table, ``{}``. None
     when the files are unknown here: a URI (``file://``, ``s3a://``),
     a single file, or a listing that raced a writer."""
-    if urlparse(path).scheme:
-        return None
-    if not os.path.lexists(path):
+    if table_absent(path):
         return {}
-    if not os.path.isdir(path):
+    if urlparse(path).scheme or not os.path.isdir(path):
         return None
 
     def fail(err: OSError) -> None:
@@ -348,9 +352,11 @@ def open_serving_index(
 
 
 def collect_serving_index(chunks: DataFrame) -> ServingIndex | None:
-    """Chunk rows, as ingest writes them, as a :class:`ServingIndex`:
+    """Chunk rows, as ingest builds them, as a :class:`ServingIndex`:
     their serving projection in one ``toArrow`` job; None as in
-    :func:`_driver_index`."""
+    :func:`_driver_index`. The rows' embedding need only hold its first
+    PATTERN_DIM dims. The caller bounds the rows: every one of them
+    reaches the driver."""
     return _driver_index(_serving_projection(chunks))
 
 

@@ -244,12 +244,47 @@ def test_table_above_one_partition_keeps_persisted_path(
     assert api.search("transfer credit", 3)["total_results"] == 2
     persisted = api._serving
     assert isinstance(persisted, DataFrame) and persisted.is_cached
+    listings = []  # the merge cannot serve this table: nothing lists it
+    for mod in (api_mod, search_mod):
+        monkeypatch.setattr(mod, "table_files",
+                            lambda p, f=mod.table_files: listings.append(p) or f(p))
     resp = api.ingest(_docs(tmp_path / "b", {"doc1": _text(1, 900)}), table, "*.txt")
+    assert listings == []
     assert api._serving is None and not persisted.is_cached
     assert resp["ingested_count"] == spark.read.parquet(table).count()
     hits = api.search(_text(1, 900), 1)["chunks"]
     assert hits[0]["source"] == "doc1" and hits[0]["score"] == 1.0
     api._invalidate()
+
+
+def test_batch_is_collected_only_when_the_table_fits_one_partition(
+        spark, tmp_path, monkeypatch):
+    """The one-partition rule is checked on the table after the write,
+    before any batch row reaches the driver: neither a first ingest into
+    an absent table nor a large batch into a small served table collects
+    the batch when the table then outgrows one partition."""
+    collected = []
+    orig = search_mod.collect_serving_index
+    monkeypatch.setattr(search_mod, "collect_serving_index",
+                        lambda chunks: collected.append(1) or orig(chunks))
+    table = str(tmp_path / "chunks")
+    api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table)
+    monkeypatch.setattr(search_mod, "PARTITION_BYTES", 1)
+    resp = api.ingest(_docs(tmp_path / "a", {"doc0": _text(0, 1500)}), table, "*.txt")
+    assert collected == [] and api._serving is None
+    assert resp["ingested_count"] == spark.read.parquet(table).count()
+    shutil.rmtree(table)
+    monkeypatch.undo()  # default rule: the small table is merged
+    monkeypatch.setattr(search_mod, "collect_serving_index",
+                        lambda chunks: collected.append(1) or orig(chunks))
+    resp = api.ingest(_docs(tmp_path / "b", {"doc1": _text(1, 900)}), table, "*.txt")
+    _check(spark, api, resp)
+    assert collected == [1]
+    small = sum(size for size, _ in search_mod.table_files(table).values())
+    monkeypatch.setattr(search_mod, "PARTITION_BYTES", small)
+    resp = api.ingest(_docs(tmp_path / "c", {"doc2": _text(2, 20000)}), table, "*.txt")
+    assert collected == [1] and api._serving is None
+    assert resp["ingested_count"] == spark.read.parquet(table).count()
 
 
 def test_ingest_after_table_removed_holds_only_the_batch(spark, tmp_path, warms):
