@@ -14,7 +14,6 @@ rows it has just written; it does not re-read the table.
 
 from __future__ import annotations
 
-import os
 import threading
 from dataclasses import dataclass, field
 
@@ -25,12 +24,11 @@ from .operators.search import (
     ServingIndex,
     open_serving_index,
     read_chunk_table,
-    table_absent,
-    table_files,
     topk_search,
     topk_search_cached,
+    validate_query,
 )
-from .operators.stats import validate_query
+from .sources.readers import table_absent, table_files
 
 
 @dataclass
@@ -97,7 +95,7 @@ class EngineAPI:
 
     def _topk(self, query: str, top_k: int) -> DataFrame | list:
         if self.chunk_table and (
-            self._serving is not None or os.path.isdir(self.chunk_table)
+            self._serving is not None or not table_absent(self.chunk_table)
         ):
             serving = self._serving
             if serving is None:

@@ -36,19 +36,10 @@ import struct
 
 import numpy as np
 
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
 _RATE_CODES = {
     88200: 1, 176400: 2, 192000: 3, 8000: 4, 16000: 5, 22050: 6,
     24000: 7, 32000: 8, 44100: 9, 48000: 10, 96000: 11,
 }
-_RATE_BY_CODE = {v: k for k, v in _RATE_CODES.items()}
 
 
 def _crc_table(poly: int, width: int) -> list[int]:

@@ -22,7 +22,6 @@ from dataclasses import dataclass
 # configs 0-11 SILK (NB/MB/WB x 10/20/40/60 ms), 12-15 hybrid
 # (SWB/FB x 10/20 ms), 16-31 CELT (NB/WB/SWB/FB x 2.5/5/10/20 ms).
 _SILK_MS = (10, 20, 40, 60)
-_BANDWIDTHS = ("NB", "MB", "WB", "SWB", "FB")
 
 
 def _config_samples(config: int) -> int:
@@ -35,14 +34,6 @@ def _config_samples(config: int) -> int:
 
 def _config_mode(config: int) -> str:
     return "silk" if config < 12 else ("hybrid" if config < 16 else "celt")
-
-
-def _config_bandwidth(config: int) -> str:
-    if config < 12:
-        return _BANDWIDTHS[config // 4]  # NB / MB / WB
-    if config < 16:
-        return "SWB" if config < 14 else "FB"
-    return ("NB", "WB", "SWB", "FB")[(config - 16) // 4]
 
 
 def _read_framelen(b: bytes, i: int) -> tuple[int, int]:

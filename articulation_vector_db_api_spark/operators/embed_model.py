@@ -121,8 +121,8 @@ def topk_search_with(
 ) -> DataFrame:
     """Cosine top-k over an ``embedder``-built index. The query vector
     inlines as literals (constant for the whole job); scoring is the
-    same codegen fold regardless of which model produced the stored
-    vectors."""
+    same cosine fold regardless of which model produced the stored
+    vectors (``CodegenFallback``: Spark evaluates it interpreted)."""
     qv = embedder.embed_query(query)
     qnorm = math.sqrt(sum(x * x for x in qv)) or 1.0
     qvec = F.array(*[F.lit(float(v)) for v in qv])

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.chunking import chunk_documents
-from ..functions.embedding import EMBEDDING_DIM, hash_embedding_from_hex
+from ..functions.embedding import EMBEDDING_DIM
+from .search import embed_chunks
 
 if TYPE_CHECKING:
     from .search import ServingIndex
@@ -246,22 +247,10 @@ def extract_text(corpus: DataFrame) -> DataFrame:
 
 
 def build_chunk_rows(extracted: DataFrame, dim: int = EMBEDDING_DIM) -> DataFrame:
-    """Chunk + embed successfully-extracted docs into upsertable rows:
-    (id = {source}_{pos}, source, pos, text, embedding) — the
-    reference's item shape (main.py:158-170). A smaller ``dim`` gives
-    the leading ``dim`` values of the same embedding."""
+    """Chunk + embed successfully-extracted docs into upsertable rows
+    (:func:`embed_chunks`, id = {source}_{pos})."""
     ok = extracted.filter(F.col("error").isNull() & (F.length("text") > 0))
-    chunks = chunk_documents(ok, id_col="source", text_col="text")
-    return (
-        chunks.withColumn("_hex", F.sha2(F.col("chunk_text"), 256))
-        .select(
-            F.col("chunk_id").alias("id"),
-            "source",
-            "pos",
-            F.col("chunk_text").alias("text"),
-            hash_embedding_from_hex(F.col("_hex"), dim).alias("embedding"),
-        )
-    )
+    return embed_chunks(chunk_documents(ok, id_col="source", text_col="text"), dim)
 
 
 def write_chunk_table(chunks: DataFrame, path: str) -> None:

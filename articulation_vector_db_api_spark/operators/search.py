@@ -5,12 +5,14 @@ the query, ANN-query Pinecone with top_k, project id/score/metadata,
 drop empty-text matches, assemble an ordered context string.
 
 Spark-first equivalent: the chunk table is a columnar DataFrame; the
-query vector is a constant-foldable expression; scoring is a codegen'd
-cosine fold; ``ORDER BY score DESC LIMIT k`` plans as
-``TakeOrderedAndProject`` — per-partition top-k heaps merged on the
-driver, no global sort and no shuffle of the full table. That is the
-exact distributed analog of Pinecone's top_k pushdown (main.py:185) and
-scales linearly with executor count at 100 TB.
+query vector is a constant-foldable expression; scoring is a cosine
+fold, ``aggregate(zip_with(...))``, which Spark 4.1 evaluates
+interpreted (``CodegenFallback``), not code-generated; ``ORDER BY
+score DESC LIMIT k`` plans as ``TakeOrderedAndProject`` — per-partition
+top-k heaps merged on the driver, no global sort and no shuffle of the
+full table. That is the exact distributed analog of Pinecone's top_k
+pushdown (main.py:185) and scales linearly with executor count at
+100 TB.
 
 Tie-breaking: Pinecone leaves tie order unspecified; the engine defines
 the total order ``score DESC, id ASC`` (SURVEY §4.3.5) so results are
@@ -23,19 +25,29 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 import math
-import os
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
-from urllib.parse import urlparse
 
 import numpy as np
 
 from ..functions.chunking import chunk_documents
-from ..functions.embedding import hash_embedding_from_hex, hash_embedding_py
+from ..functions.embedding import (
+    EMBEDDING_DIM,
+    hash_embedding_from_hex,
+    hash_embedding_py,
+)
 from ..functions.vector import dot, l2_norm
-from ..sources.readers import load_table, spread_input
+from ..sources.readers import load_table, spread_input, table_files
 
 DEFAULT_TOP_K = 5  # main.py:89
+
+
+def validate_query(query: str) -> str:
+    """Empty-query guard (O11, main.py:317-318): an empty query is a
+    client error, not a plan."""
+    if not query or not query.strip():
+        raise ValueError("Query cannot be empty")
+    return query
 
 
 def query_vector_literals(query: str, dim: int | None = None) -> tuple[list[float], float]:
@@ -52,6 +64,19 @@ def query_vector_literals(query: str, dim: int | None = None) -> tuple[list[floa
     return qv, qnorm
 
 
+def embed_chunks(chunks: DataFrame, dim: int = EMBEDDING_DIM) -> DataFrame:
+    """chunk_documents rows -> (id, source, pos, text, embedding), the
+    reference's item shape (main.py:158-170). A smaller ``dim`` gives
+    the leading ``dim`` values of the same embedding."""
+    return chunks.withColumn("_hex", F.sha2(F.col("chunk_text"), 256)).select(
+        F.col("chunk_id").alias("id"),
+        "source",
+        "pos",
+        F.col("chunk_text").alias("text"),
+        hash_embedding_from_hex(F.col("_hex"), dim).alias("embedding"),
+    )
+
+
 def build_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → chunk rows with embeddings (the engine's 'index').
 
@@ -66,18 +91,7 @@ def build_chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1024-dim embedding projection across all cores — at scale the
     # scan's own splits make this a cheap rebalance
     docs = docs.transform(spread_input, sf_dir, "documents")
-    chunks = chunk_documents(docs, id_col="doc_id", text_col="text")
-    return (
-        chunks.withColumn("_hex", F.sha2(F.col("chunk_text"), 256))
-        .withColumn("embedding", hash_embedding_from_hex(F.col("_hex")))
-        .select(
-            F.col("chunk_id").alias("id"),
-            "source",
-            "pos",
-            F.col("chunk_text").alias("text"),
-            "embedding",
-        )
-    )
+    return embed_chunks(chunk_documents(docs, id_col="doc_id", text_col="text"))
 
 
 def topk_search(
@@ -94,14 +108,17 @@ def topk_search(
     Empty-text matches are dropped before the limit (main.py:208), so
     total_results ≤ top_k.
     """
-    if not query or not query.strip():
-        # main.py:317-318 — empty query is a client error, not a plan
-        raise ValueError("Query cannot be empty")
-    scored = score_chunks(spark, sf_dir, query)
+    validate_query(query)
+    return _top_rows(score_chunks(spark, sf_dir, query), top_k)
+
+
+def _top_rows(scored: DataFrame, top_k: int) -> DataFrame:
+    """The best ``top_k`` rows of an (id, source, text, raw) relation as
+    (id, source, text, score), score = ``round(raw, 6)``. Ordered by
+    ``(raw DESC, id ASC)``, it plans as ``TakeOrderedAndProject``:
+    per-partition heaps, a bounded driver merge."""
     return (
-        scored.select(
-            "id", "source", "text", F.round("raw", 6).alias("score"), "raw"
-        )
+        scored.selectExpr("id", "source", "text", "round(raw, 6) AS score", "raw")
         .orderBy(F.desc("raw"), F.asc("id"))
         .limit(top_k)
         .drop("raw")
@@ -136,13 +153,8 @@ def chunk_patterns(
         docs = docs.transform(spread_input, sf_dir, "documents")
     chunks = chunk_documents(docs, id_col="doc_id", text_col="text")
     return (
-        chunks.withColumn("_hex", F.sha2(F.col("chunk_text"), 256))
-        .select(
-            F.col("chunk_id").alias("id"),
-            "source",
-            F.col("chunk_text").alias("text"),
-            hash_embedding_from_hex(F.col("_hex"), PATTERN_DIM).alias("pattern"),
-        )
+        embed_chunks(chunks, PATTERN_DIM)
+        .select("id", "source", "text", F.col("embedding").alias("pattern"))
         .filter(F.length("text") > 0)
     )
 
@@ -160,27 +172,6 @@ def score_chunks(
     return index.withColumn("raw", score).select("id", "source", "text", "raw")
 
 
-def _pattern_topk(indexed: DataFrame, query: str, top_k: int) -> DataFrame:
-    """Top-k cosine over a (id, source, text, pattern) relation —
-    the shared tail of every stored-index search path. Plans as
-    ``TakeOrderedAndProject`` (per-partition heaps, bounded driver
-    merge); the query vector is a 32-literal constant."""
-    if not query or not query.strip():
-        raise ValueError("Query cannot be empty")
-    qv, qnorm = query_vector_literals(query, PATTERN_DIM)
-    qvec = F.array(*[F.lit(v) for v in qv])
-    score = dot(F.col("pattern"), qvec) / (
-        l2_norm(F.col("pattern")) * F.lit(qnorm)
-    )
-    return (
-        indexed.withColumn("raw", score)
-        .select("id", "source", "text", F.round("raw", 6).alias("score"), "raw")
-        .orderBy(F.desc("raw"), F.asc("id"))
-        .limit(top_k)
-        .drop("raw")
-    )
-
-
 # The chunk table as operators/ingest.py writes it, partitioned by
 # ``source``. Declared because Spark infers a partition column's type
 # from its values: sources ``2024`` and ``0042`` would read back as the
@@ -195,23 +186,20 @@ def read_chunk_table(spark: SparkSession, table_path: str) -> DataFrame:
     return spark.read.schema(CHUNK_TABLE_SCHEMA).parquet(table_path)
 
 
-def _indexed_patterns(chunks: DataFrame) -> DataFrame:
-    """Stored chunk table -> the serving projection (id, source, text,
-    pattern). Scoring slices the stored 1024-dim embedding down to its
-    32-dim pattern (periodicity rewrite); column pruning means only
-    the embedding + identity columns are read."""
-    return chunks.filter(F.length("text") > 0).select(
-        "id", "source", "text",
-        F.slice(F.col("embedding"), 1, PATTERN_DIM).alias("pattern"),
-    )
-
-
 def _serving_projection(chunks: DataFrame) -> DataFrame:
-    """:func:`_indexed_patterns` plus ``pnorm``. The pattern norm is
+    """Stored chunk rows -> the serving projection (id, source, text,
+    pattern, pnorm). The pattern is the stored 1024-dim embedding's
+    first 32 dims (periodicity rewrite), so column pruning reads only
+    the embedding and identity columns. The pattern norm is
     query-independent: computed once here, every request's fold is
     dot-only (half the per-row work)."""
-    return _indexed_patterns(chunks).withColumn(
-        "pnorm", l2_norm(F.col("pattern"))
+    return (
+        chunks.filter(F.length("text") > 0)
+        .select(
+            "id", "source", "text",
+            F.slice(F.col("embedding"), 1, PATTERN_DIM).alias("pattern"),
+        )
+        .withColumn("pnorm", l2_norm(F.col("pattern")))
     )
 
 
@@ -225,12 +213,14 @@ def topk_search_indexed(
     the reference's steady-state: ingest once, query many
     (main.py:176-216 against the persisted index).
 
-    A source-scoped search over the partitioned table prunes
-    partitions entirely; serving tiers that issue many queries should
-    ``open_serving_index`` once instead and search the cached
-    projection."""
-    chunks = read_chunk_table(spark, table_path)
-    return _pattern_topk(_indexed_patterns(chunks), query, top_k)
+    It scores the table's serving projection with the same fold as
+    :func:`topk_search_cached`. A source-scoped search over the
+    partitioned table prunes partitions entirely; serving tiers that
+    issue many queries should ``open_serving_index`` once instead and
+    search the cached projection."""
+    return topk_search_cached(
+        _serving_projection(read_chunk_table(spark, table_path)), query, top_k
+    )
 
 
 @dataclass(frozen=True)
@@ -250,66 +240,21 @@ class ServingIndex:
         return cls([], [], [], np.empty((PATTERN_DIM, 0)), np.empty(0))
 
 
-def _hidden(name: str) -> bool:
-    """Spark's file index skips these names: ``_temporary``,
-    ``_SUCCESS``, ``.crc`` checksums (a ``_`` name holding ``=`` is a
-    partition directory and is read)."""
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-
-def table_absent(path: str) -> bool:
-    """Nothing at a local ``path``: an empty table. A URI is never
-    known to be absent here."""
-    return not urlparse(path).scheme and not os.path.lexists(path)
-
-
-def table_files(path: str) -> dict[str, tuple[int, int]] | None:
-    """The data files Spark reads for a local table, as ``{relpath:
-    (size, mtime_ns)}``, skipping hidden files and directories the way
-    Spark does. An absent local path is an empty table, ``{}``. None
-    when the files are unknown here: a URI (``file://``, ``s3a://``),
-    a single file, or a listing that raced a writer."""
-    if table_absent(path):
-        return {}
-    if urlparse(path).scheme or not os.path.isdir(path):
-        return None
-
-    def fail(err: OSError) -> None:
-        raise err
-
-    files = {}
-    try:
-        for root, dirs, names in os.walk(path, onerror=fail):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            for name in names:
-                if not _hidden(name):
-                    full = os.path.join(root, name)
-                    st = os.stat(full)
-                    files[os.path.relpath(full, path)] = (
-                        st.st_size, st.st_mtime_ns,
-                    )
-    except OSError:
-        return None
-    return files
-
-
 PARTITION_BYTES = 64 << 20  # source parquet per cached serving partition
 
 
-def serving_partitions(
-    files: dict[str, tuple[int, int]] | None, partition_bytes: int | None = None
-) -> int | None:
+def serving_partitions(files: dict[str, tuple[int, int]] | None) -> int | None:
     """Cached partitions for a table of ``files`` (:func:`table_files`):
-    one per ``partition_bytes`` (default :data:`PARTITION_BYTES`) of
-    data, at least one; None when the files are unknown."""
+    one per :data:`PARTITION_BYTES` of data, at least one; None when
+    the files are unknown."""
     if files is None:
         return None
     total = sum(size for size, _mtime in files.values())
-    return max(1, -(-total // (partition_bytes or PARTITION_BYTES)))
+    return max(1, -(-total // PARTITION_BYTES))
 
 
 def open_serving_index(
-    spark: SparkSession, table_path: str, partition_bytes: int | None = None
+    spark: SparkSession, table_path: str
 ) -> DataFrame | ServingIndex:
     """O15 bootstrap pre-warm: read the stored chunk table ONCE and
     project the serving columns, so the steady-state read path never
@@ -338,7 +283,7 @@ def open_serving_index(
     from pyspark import StorageLevel
 
     chunks = read_chunk_table(spark, table_path)
-    n_parts = serving_partitions(table_files(table_path), partition_bytes)
+    n_parts = serving_partitions(table_files(table_path))
     df = _serving_projection(chunks)
     if n_parts == 1:
         local = _driver_index(df)
@@ -448,15 +393,15 @@ def topk_search_cached(
 
     A :class:`ServingIndex` is scored in-process and the top rows come
     back as a list of ``Row(id, source, text, score)``, with no Spark
-    job. A persisted DataFrame gets the latency-tuned twin of
-    :func:`_pattern_topk` with bit-identical scores: the scoring
-    expression is ONE SQL string (a handful of py4j roundtrips instead
-    of ~100 Column-API calls — measured ~0.3 s of per-request
-    plan-build at p50 before this), the same left-to-right
-    double-precision fold as functions/vector.py:dot, divided by the
-    pre-computed ``pnorm`` times the query-norm literal."""
-    if not query or not query.strip():
-        raise ValueError("Query cannot be empty")
+    job. Any other serving projection (a persisted DataFrame, or
+    :func:`topk_search_indexed`'s read of the table) is scored in Spark
+    with bit-identical scores: the scoring expression is ONE SQL string
+    (a handful of py4j roundtrips instead of ~100 Column-API calls —
+    measured ~0.3 s of per-request plan-build at p50 before this), the
+    same left-to-right double-precision fold as functions/vector.py:dot,
+    divided by the pre-computed ``pnorm`` times the query-norm
+    literal."""
+    validate_query(query)
     if isinstance(index, ServingIndex):
         return _local_topk(index, query, top_k)
     qv, qnorm = query_vector_literals(query, PATTERN_DIM)
@@ -466,12 +411,8 @@ def topk_search_cached(
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"0.0D, (acc, v) -> acc + v) / (pnorm * {qnorm!r}D)"
     )
-    return (
-        index.selectExpr("id", "source", "text", f"({raw_sql}) AS raw")
-        .selectExpr("id", "source", "text", "round(raw, 6) AS score", "raw")
-        .orderBy(F.desc("raw"), F.asc("id"))
-        .limit(top_k)
-        .drop("raw")
+    return _top_rows(
+        index.selectExpr("id", "source", "text", f"({raw_sql}) AS raw"), top_k
     )
 
 

@@ -12,14 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .search import read_chunk_table
-
-
-def validate_query(query: str) -> str:
-    """Empty-query guard (O11, main.py:317-318)."""
-    if not query or not query.strip():
-        raise ValueError("Query cannot be empty")
-    return query
+from .search import read_chunk_table, validate_query  # noqa: F401
 
 
 def index_stats(chunks: DataFrame) -> dict:

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .api import EngineAPI
+from .sources.readers import table_absent
 
 SERVICE_NAME = "College PDF Vector Database API"  # main.py:223
 
@@ -178,13 +179,13 @@ def serve(
     The served /search reads the configured chunk table (the
     reference's steady-state: queries hit the persisted index,
     main.py:176-216) through the API's pre-warmed serving index, which
-    each /ingest into the table updates; until an ingest creates the
-    table, searches fall back to the API's raw-documents path."""
+    each /ingest into the table updates; until an ingest creates a
+    local table, searches fall back to the API's raw-documents path. A
+    URI table (``file://``, ``s3a://``) is never known to be absent, so
+    it is warmed at start-up and must exist."""
     if api.chunk_table is None:
         api.chunk_table = cfg.table_path
-        import os
-
-        if os.path.isdir(cfg.table_path):
+        if not table_absent(cfg.table_path):
             api.warm()  # O15 bootstrap: don't let request 1 pay the scan
     handler = type("BoundHandler", (_Handler,), {"api": api, "cfg": cfg})
     server = ThreadingHTTPServer((host, port), handler)

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -127,8 +128,51 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file index skips these names: ``_temporary``,
+    ``_SUCCESS``, ``.crc`` checksums (a ``_`` name holding ``=`` is a
+    partition directory and is read)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def table_absent(path: str) -> bool:
+    """Nothing at a local ``path``: an empty table. A URI is never
+    known to be absent here."""
+    return not urlparse(path).scheme and not os.path.lexists(path)
+
+
+def table_files(path: str) -> dict[str, tuple[int, int]] | None:
+    """The data files Spark reads for a local table, as ``{relpath:
+    (size, mtime_ns)}``, skipping hidden files and directories the way
+    Spark does. An absent local path is an empty table, ``{}``. None
+    when the files are unknown here: a URI (``file://``, ``s3a://``),
+    a single file, or a listing that raced a writer."""
+    if table_absent(path):
+        return {}
+    if urlparse(path).scheme or not os.path.isdir(path):
+        return None
+
+    def fail(err: OSError) -> None:
+        raise err
+
+    files = {}
+    try:
+        for root, dirs, names in os.walk(path, onerror=fail):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for name in names:
+                if not _hidden(name):
+                    full = os.path.join(root, name)
+                    st = os.stat(full)
+                    files[os.path.relpath(full, path)] = (
+                        st.st_size, st.st_mtime_ns,
+                    )
+    except OSError:
+        return None
+    return files
+
+
 # r17 (guide §2.4, remove shuffles outright): total on-disk bytes per
-# table path, memoized — one os.walk per path per process. Feeds the
+# table path, memoized — one listing per path per process. Feeds the
 # spread_input() decision below without touching Spark planning (a
 # df.rdd.getNumPartitions() probe costs ~100 ms of py4j/planning per
 # call, which would land inside the bench's timed region).
@@ -137,20 +181,16 @@ _TABLE_BYTES: dict[str, int | None] = {}
 
 
 def _path_bytes(path: str) -> int | None:
-    """On-disk bytes of a local file or directory; None when the size
-    is unknown (a path that is neither, such as an ``s3a://`` or
-    ``hdfs://`` URI)."""
+    """Bytes of a local file, or of the files Spark reads for a local
+    table (:func:`table_files`); None when the size is unknown (a URI
+    such as ``s3a://`` or ``hdfs://``, an absent path, or a listing
+    that raced a writer)."""
     if path not in _TABLE_BYTES:
-        size = None
         if os.path.isfile(path):
             size = os.path.getsize(path)
-        elif os.path.isdir(path):
-            size = 0
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.startswith((".", "_")):
-                        continue  # _SUCCESS, .crc sidecars
-                    size += os.path.getsize(os.path.join(root, fname))
+        else:
+            files = None if table_absent(path) else table_files(path)
+            size = None if files is None else sum(s for s, _ in files.values())
         _TABLE_BYTES[path] = size
     return _TABLE_BYTES[path]
 

@@ -9,6 +9,7 @@ import random
 import pytest
 from pyspark.sql import DataFrame
 
+from articulation_vector_db_api_spark.operators import search as search_mod
 from articulation_vector_db_api_spark.operators.search import (
     ServingIndex,
     assemble_context,
@@ -16,6 +17,7 @@ from articulation_vector_db_api_spark.operators.search import (
     spark_round6,
     topk_search,
     topk_search_cached,
+    topk_search_indexed,
 )
 from articulation_vector_db_api_spark.operators.stats import validate_query
 from articulation_vector_db_api_spark.sources.readers import load_table
@@ -34,6 +36,14 @@ def _rows(topk):
 def _release(idx) -> None:
     if isinstance(idx, DataFrame):
         idx.unpersist()
+
+
+def _open_persisted(spark, table, monkeypatch):
+    """open_serving_index of ``table`` as a persisted DataFrame, as for
+    a table above one serving partition."""
+    with monkeypatch.context() as m:
+        m.setattr(search_mod, "PARTITION_BYTES", 1)
+        return open_serving_index(spark, table)
 
 
 def _chunk_rows(spark, sf_dir):
@@ -86,9 +96,6 @@ def test_serving_index_parity_and_invalidation(spark, tmp_path):
     index equal to a fresh warm of it."""
     from articulation_vector_db_api_spark.api import EngineAPI
     from articulation_vector_db_api_spark.operators.ingest import write_chunk_table
-    from articulation_vector_db_api_spark.operators.search import (
-        topk_search_indexed,
-    )
 
     table = str(tmp_path / "chunks")
     write_chunk_table(_chunk_rows(spark, SF_SMALL), table)
@@ -136,16 +143,18 @@ def _queries(index: ServingIndex, n_random: int, n_exact: int, seed: int):
 
 
 @pytest.mark.parametrize("sf_dir", [SF_MEDIUM, SF_LARGE])
-def test_in_process_index_matches_persisted_path(spark, tmp_path, sf_dir):
+def test_in_process_index_matches_persisted_path(
+        spark, tmp_path, monkeypatch, sf_dir):
     """The driver-resident index returns the same rows (id, source,
     text, score), in the same order, as the persisted-DataFrame path
-    for every top_k, including more than the row count. The table is
-    written unpartitioned: one file per source would make partition
-    discovery, not scoring, the cost of this test."""
+    and as topk_search_indexed over the stored table, for every top_k,
+    including more than the row count. The table is written
+    unpartitioned: one file per source would make partition discovery,
+    not scoring, the cost of this test."""
     table = str(tmp_path / "chunks")
     _chunk_rows(spark, sf_dir).write.parquet(table)
     local = open_serving_index(spark, table)
-    cached = open_serving_index(spark, table, partition_bytes=1)
+    cached = _open_persisted(spark, table, monkeypatch)
     try:
         assert isinstance(local, ServingIndex)
         assert isinstance(cached, DataFrame) and cached.is_cached
@@ -155,7 +164,9 @@ def test_in_process_index_matches_persisted_path(spark, tmp_path, sf_dir):
             for k in (1, 5, 10, 20, n + 1):
                 a = [tuple(r) for r in topk_search_cached(local, q, k)]
                 b = [tuple(r) for r in topk_search_cached(cached, q, k).collect()]
-                assert a == b, (q[:40], k)
+                c = [tuple(r) for r in
+                     topk_search_indexed(spark, table, q, k).collect()]
+                assert a == b == c, (q[:40], k)
                 assert len(a) == min(k, n)
         for text, cid in exact:
             rows = topk_search_cached(local, text, 20)
@@ -196,14 +207,14 @@ def small_table(spark, tmp_path_factory) -> str:
     return table
 
 
-def test_serving_index_fallbacks(spark, small_table):
+def test_serving_index_fallbacks(spark, small_table, monkeypatch):
     """Above one partition, or when the table's size is unknown (a URI,
     not a local directory), open_serving_index keeps the persisted
     DataFrame, and it serves the same rows as the in-process index."""
     table = small_table
     local = open_serving_index(spark, table)
     assert isinstance(local, ServingIndex)
-    for idx in (open_serving_index(spark, table, partition_bytes=1),
+    for idx in (_open_persisted(spark, table, monkeypatch),
                 open_serving_index(spark, "file://" + table)):
         try:
             assert isinstance(idx, DataFrame) and idx.is_cached
@@ -218,7 +229,7 @@ def test_serving_index_fallbacks(spark, small_table):
         topk_search_cached(local, "data", -1)
 
 
-def test_in_process_search_starts_no_spark_job(spark, small_table):
+def test_in_process_search_starts_no_spark_job(spark, small_table, monkeypatch):
     """A warmed EngineAPI over a one-partition table answers /search
     without a Spark job, with the same response as over the persisted
     index."""
@@ -228,7 +239,7 @@ def test_in_process_search_starts_no_spark_job(spark, small_table):
     api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table).warm()
     assert isinstance(api._serving, ServingIndex)
     spark_api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table)
-    spark_api._serving = open_serving_index(spark, table, partition_bytes=1)
+    spark_api._serving = _open_persisted(spark, table, monkeypatch)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()

@@ -316,3 +316,36 @@ def test_empty_text_document_keeps_its_old_rows(spark, tmp_path):
     _check(spark, api, resp)
     assert sum(s == "keep" for s in api._serving.sources) == before == 2
     assert set(api._serving.sources) == {"keep", "doc1", "doc2"}
+
+
+def test_uri_table_is_served_after_an_ingest(spark, tmp_path):
+    """A ``file://`` table's size is unknown here, so it is served by a
+    persisted DataFrame; after an ingest drops that index, the next
+    search re-warms it from the table instead of answering from the
+    raw documents in ``data_dir``. The HTTP tier warms such a table at
+    start-up too."""
+    uri = "file://" + str(tmp_path / "chunks")
+    api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=uri)
+    api.ingest(_docs(tmp_path / "a", {"doc0": _text(0, 1500)}), uri, "*.txt")
+    api.warm()
+    persisted = api._serving
+    assert isinstance(persisted, DataFrame) and persisted.is_cached
+    api.ingest(_docs(tmp_path / "b", {"doc1": _text(1, 900)}), uri, "*.txt")
+    assert api._serving is None and not persisted.is_cached
+    for q, k in [("transfer credit", 5), (_text(1, 900), 1)]:
+        want = [(r.id, r.source, r.score) for r in
+                topk_search_indexed(spark, uri, q, k).collect()]
+        got = [(c["id"], c["source"], c["score"])
+               for c in api.search(q, k)["chunks"]]
+        assert got == want and got
+    assert want[0][1] == "doc1" and want[0][2] == 1.0
+    api._invalidate()
+
+    served = EngineAPI(spark=spark, data_dir=SF_SMALL)
+    server = serve(served, ServerConfig(table_path=uri))
+    try:
+        assert isinstance(served._serving, DataFrame)
+    finally:
+        server.shutdown()
+        server.server_close()
+        served._invalidate()

@@ -77,3 +77,22 @@ def test_unknown_size_is_not_shuffled(spark):
     df = readers.load_table(spark, SF, "documents").select("doc_id", "text")
     assert readers._path_bytes("s3a://bucket/sf/documents.parquet") is None
     assert readers.spread_input(df, "s3a://bucket/sf", "documents") is df
+
+
+def test_hidden_directories_are_not_counted(tmp_path):
+    """The size probe counts the files Spark reads: a writer's
+    ``_temporary`` directory and ``.``/``_`` sidecars are left out,
+    while a partition directory named ``_x=1`` is read."""
+    table = tmp_path / "t"
+    for rel, n in [("part-0.parquet", 100), ("_x=1/part-1.parquet", 20),
+                   ("_SUCCESS", 0), (".part-0.parquet.crc", 7),
+                   ("_temporary/0/part-2.parquet", 5000)]:
+        (table / rel).parent.mkdir(parents=True, exist_ok=True)
+        (table / rel).write_bytes(b"x" * n)
+    path, absent = str(table), str(tmp_path / "absent")
+    try:
+        assert readers._path_bytes(path) == 120
+        assert readers._path_bytes(absent) is None
+    finally:
+        readers._TABLE_BYTES.pop(path, None)
+        readers._TABLE_BYTES.pop(absent, None)

@@ -1001,6 +1001,13 @@ STAGE_EXPECTATIONS: dict[str, tuple[list[str], list[str]]] = {
          r"Exchange SinglePartition", r"CartesianProduct",
          r"BatchEvalPython"],
     ),
+    "search_indexed_topk[table]": (
+        # a search over the stored chunk table is the serving
+        # projection's SQL fold under per-partition top-k heaps: no
+        # shuffle, no global sort, and the scan never reads ``pos``
+        [r"TakeOrderedAndProject", r"ReadSchema: struct<id:string,text:string"],
+        [r"Exchange", r"\bSort\b", r"ReadSchema: [^\n]*\bpos:"],
+    ),
 }
 
 STAGE_COUNT_LIMITS: dict[str, list[tuple[str, int]]] = {
@@ -1009,14 +1016,30 @@ STAGE_COUNT_LIMITS: dict[str, list[tuple[str, int]]] = {
 
 
 def _stage_frames(spark):
+    import atexit
+    import shutil
+    import tempfile
+
+    from articulation_vector_db_api_spark.operators.ingest import (
+        write_chunk_table,
+    )
     from articulation_vector_db_api_spark.operators.search import (
+        build_chunk_index,
         rrf_candidate_prune,
+        topk_search_indexed,
     )
     from articulation_vector_db_api_spark.suites.core import hybrid_rrf_scored
 
+    # the chunk table as ingest writes it, for the stored-table search
+    table = tempfile.mkdtemp(prefix="plan-check-chunks-")
+    atexit.register(shutil.rmtree, table, True)
+    write_chunk_table(build_chunk_index(spark, SF), table)
     return {
         "search_hybrid_rrf[prune]": rrf_candidate_prune(
             hybrid_rrf_scored(spark, SF), 128, 32
+        ),
+        "search_indexed_topk[table]": topk_search_indexed(
+            spark, table, "transfer credits", 5
         ),
     }
 
