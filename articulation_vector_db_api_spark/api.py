@@ -121,17 +121,19 @@ class EngineAPI:
         # scoring plan a second time.
         if isinstance(topk, DataFrame):
             topk = topk.collect()
-        rows = sorted(topk, key=lambda r: (-r.score, r.id))
+        # (id, source, text, score) by position: a Row field read by
+        # name is a list.index over its field names
+        rows = sorted(map(tuple, topk), key=lambda r: (-r[3], r[0]))
         return {
             "query": query,
             "chunks": [
                 # ChunkResult shape, main.py:81-85
-                {"text": r.text, "source": r.source, "score": r.score, "id": r.id}
-                for r in rows
+                {"text": text, "source": source, "score": score, "id": rid}
+                for rid, source, text, score in rows
             ],
             "total_results": len(rows),
             "context": "\n\n---\n\n".join(
-                f"[Source: {r.source}]\n{r.text}" for r in rows
+                f"[Source: {source}]\n{text}" for _, source, text, _ in rows
             ),
         }
 

@@ -358,18 +358,45 @@ def spark_round6(x: float) -> float:
     return float(d) + 0.0  # BigDecimal has no -0: round(-1e-7, 6) is 0.0
 
 
+# Pattern columns per step of _pattern_dots: its temporary is
+# PATTERN_DIM x _FOLD_COLUMNS doubles (1 MiB) per request, not
+# PATTERN_DIM x n (about 22 MB for a 64 MB table of ~85k chunks).
+_FOLD_COLUMNS = 4096
+
+
+def _pattern_dots(patterns: np.ndarray, qv: list[float]) -> np.ndarray:
+    """functions/vector.py:dot of each column of ``patterns`` (PATTERN_DIM,
+    n) with ``qv``, bit for bit: see :func:`_local_topk`."""
+    q = np.asarray(qv)[:, None]
+    dots = np.empty(patterns.shape[1])
+    for start in range(0, dots.size, _FOLD_COLUMNS):
+        prod = patterns[:, start:start + _FOLD_COLUMNS] * q
+        np.add.accumulate(prod, axis=0, out=prod)
+        np.add(prod[-1], 0.0, out=dots[start:start + _FOLD_COLUMNS])
+    return dots
+
+
 def _local_topk(index: ServingIndex, query: str, top_k: int) -> list[Row]:
     """Top-k over a :class:`ServingIndex`, bit-identical to the SQL
     path: the same left-to-right double fold from 0.0 as
     functions/vector.py:dot, divided by ``pnorm * qnorm``, ordered by
-    ``(raw DESC, id ASC)``."""
+    ``(raw DESC, id ASC)``.
+
+    The fold (:func:`_pattern_dots`) is one multiply and one
+    ``np.add.accumulate`` down the PATTERN_DIM axis per block of
+    :data:`_FOLD_COLUMNS` columns, not two numpy calls per dimension:
+    numpy releases the GIL in each call on more than ~500 elements, so
+    a per-dimension loop makes every request give up and re-take the
+    driver's GIL 64 times while the HTTP threads contend for it. The
+    accumulate is exact: it is sequential by definition, so each partial
+    sum is the fold's (``np.add.reduce`` is not: it sums pairwise when
+    the summed axis ends up innermost, as for a one-row index), and the
+    final ``+ 0.0`` turns an all-zero column's ``-0.0`` into the
+    fold's ``0.0``."""
     if top_k < 0:
         raise ValueError(f"top_k must be >= 0, got {top_k}")
     qv, qnorm = query_vector_literals(query, PATTERN_DIM)
-    acc = np.zeros(len(index.ids))
-    for d in range(PATTERN_DIM):
-        acc = acc + index.patterns[d] * qv[d]
-    raw = acc / (index.pnorm * qnorm)
+    raw = _pattern_dots(index.patterns, qv) / (index.pnorm * qnorm)
     if 0 < top_k < raw.size:
         # every row tying the k-th best raw is a candidate, so the exact
         # (raw, id) sort below decides ties the way Spark's sort does

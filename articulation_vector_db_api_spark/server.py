@@ -27,14 +27,17 @@ served table merges the rows it writes into that index, so the next
 /search over larger tables, run short Spark jobs. ``ThreadingHTTPServer``
 gives request concurrency; Spark sessions are thread-safe for job
 submission, and the scheduler (FAIR at deployment) interleaves the
-short serving jobs. This tier exists for surface parity and smoke-level
-serving, not as a production gateway: at deployment the same
-``EngineAPI`` sits behind a real ASGI server, unchanged.
+short serving jobs. CPU work in a handler holds the driver's GIL, so
+the hot path keeps its numpy calls O(1) per request (per 4096-row block
+of the serving index). This tier exists for surface parity and
+smoke-level serving, not as a production gateway: at deployment the
+same ``EngineAPI`` sits behind a real ASGI server, unchanged.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import threading
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -124,8 +127,6 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, self.api.search(query, top_k))
             elif self.path == "/ingest":
                 corpus = str(req.get("corpus_dir") or self.cfg.corpus_dir)
-                import os
-
                 if not corpus or not os.path.isdir(corpus):
                     self._send(
                         404, {"detail": f"PDF not found: {corpus or '<unset>'}"}
@@ -180,9 +181,10 @@ def serve(
     reference's steady-state: queries hit the persisted index,
     main.py:176-216) through the API's pre-warmed serving index, which
     each /ingest into the table updates; until an ingest creates a
-    local table, searches fall back to the API's raw-documents path. A
-    URI table (``file://``, ``s3a://``) is never known to be absent, so
-    it is warmed at start-up and must exist."""
+    local or ``file://`` table, searches fall back to the API's
+    raw-documents path. Any other URI table (``s3a://``, ``hdfs://``)
+    is never known to be absent, so it is warmed at start-up and must
+    exist."""
     if api.chunk_table is None:
         api.chunk_table = cfg.table_path
         if not table_absent(cfg.table_path):

@@ -136,17 +136,21 @@ def _hidden(name: str) -> bool:
 
 
 def table_absent(path: str) -> bool:
-    """Nothing at a local ``path``: an empty table. A URI is never
-    known to be absent here."""
-    return not urlparse(path).scheme and not os.path.lexists(path)
+    """Nothing at a local ``path`` or ``file://`` URI: an empty table.
+    Any other URI (``s3a://``, ``hdfs://``) is never known to be absent
+    here."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        return not os.path.lexists(url.path)
+    return not url.scheme and not os.path.lexists(path)
 
 
 def table_files(path: str) -> dict[str, tuple[int, int]] | None:
     """The data files Spark reads for a local table, as ``{relpath:
     (size, mtime_ns)}``, skipping hidden files and directories the way
-    Spark does. An absent local path is an empty table, ``{}``. None
-    when the files are unknown here: a URI (``file://``, ``s3a://``),
-    a single file, or a listing that raced a writer."""
+    Spark does. An absent table (:func:`table_absent`) is an empty one,
+    ``{}``. None when the files are unknown here: a URI (``file://``,
+    ``s3a://``), a single file, or a listing that raced a writer."""
     if table_absent(path):
         return {}
     if urlparse(path).scheme or not os.path.isdir(path):

@@ -6,11 +6,13 @@ from __future__ import annotations
 import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import DataFrame
 
 from articulation_vector_db_api_spark.operators import search as search_mod
 from articulation_vector_db_api_spark.operators.search import (
+    PATTERN_DIM,
     ServingIndex,
     assemble_context,
     open_serving_index,
@@ -194,6 +196,79 @@ def test_spark_round6_matches_spark_sql(spark):
     got = [spark_round6(x) for x in vals]
     assert [repr(g) for g in got] == [repr(w) for w in want]
     assert want[:3] == [0.123457, 1e-06, 0.500001]
+
+
+def _left_fold_dots(patterns: np.ndarray, qv: list[float]) -> np.ndarray:
+    """The reference fold, functions/vector.py:dot per column: a left
+    fold from 0.0, one dimension at a time."""
+    acc = np.zeros(patterns.shape[1])
+    for d in range(patterns.shape[0]):
+        acc = acc + patterns[d] * qv[d]
+    return acc
+
+
+@pytest.mark.parametrize(
+    "n", [0, 1, 2, 499, 501, 820, 2 * search_mod._FOLD_COLUMNS + 3])
+def test_pattern_dots_bitwise_equal_left_fold(n):
+    """The in-process fold returns the left fold's doubles bit for bit,
+    for one row, for each side of numpy's ~500-element threshold, and
+    across more than one block of columns. Some products are zeros of
+    either sign; one column's products are all ``-0.0``, whose sum the
+    fold from 0.0 makes ``0.0``."""
+    rng = np.random.default_rng(n)
+    patterns = rng.standard_normal((PATTERN_DIM, n))
+    qv = rng.standard_normal(PATTERN_DIM).tolist()
+    qv[3], qv[4] = 0.0, -0.0
+    if n >= 3:
+        patterns[:, -1] = np.where(np.signbit(qv), 0.0, -0.0)
+        patterns[:, -2] = 0.0
+        patterns[7, -3] = -0.0
+        prods = patterns[:, -1] * np.asarray(qv)
+        assert np.all(prods == 0.0) and np.all(np.signbit(prods))
+    real_qv, _ = search_mod.query_vector_literals("transfer credits", PATTERN_DIM)
+    for q in (qv, real_qv):
+        got = search_mod._pattern_dots(patterns, q)
+        want = _left_fold_dots(patterns, q)
+        assert got.dtype == want.dtype == np.float64 and got.shape == (n,)
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_search_orders_rounded_score_ties_by_id(spark, tmp_path):
+    """Two rows whose raw scores differ but round to the same 6-dp score
+    come back ``(score DESC, id ASC)`` from EngineAPI.search, over the
+    driver-resident index and over the persisted DataFrame alike, though
+    the top-k itself orders them by raw score."""
+    from articulation_vector_db_api_spark.api import EngineAPI
+
+    q = "transfer credits"
+    qv, _ = search_mod.query_vector_literals(q, PATTERN_DIM)
+    near = list(qv)
+    d = max(range(PATTERN_DIM), key=lambda i: abs(qv[i]))
+    near[d] *= 1 + 1e-4  # cosine about 1 - 1e-10: rounds to 1.0
+    far = [-x for x in qv[:16]] + qv[16:]
+    chunks = spark.createDataFrame(
+        [("b", "s1", "same", qv), ("a", "s2", "near", near),
+         ("c", "s3", "far", far)],
+        "id string, source string, text string, embedding array<double>",
+    )
+    local = search_mod.collect_serving_index(chunks)
+    persisted = search_mod._serving_projection(chunks).persist()
+    try:
+        resps = []
+        for serving in (local, persisted):
+            top = [(r.id, r.score) for r in _rows(topk_search_cached(serving, q, 3))]
+            assert top[:2] == [("b", 1.0), ("a", 1.0)]  # raw b > raw a
+            api = EngineAPI(spark=spark, data_dir=SF_SMALL,
+                            chunk_table=str(tmp_path / "unused"))
+            api._serving = serving
+            resps.append(api.search(q, 3))
+        assert resps[0] == resps[1]
+        assert [(c["id"], c["score"]) for c in resps[0]["chunks"][:2]] == [
+            ("a", 1.0), ("b", 1.0)]
+        assert resps[0]["chunks"][2]["id"] == "c"
+        assert resps[0]["context"].startswith("[Source: s2]\nnear\n\n---\n\n")
+    finally:
+        persisted.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -30,6 +30,7 @@ from articulation_vector_db_api_spark.operators.search import (
     topk_search_indexed,
 )
 from articulation_vector_db_api_spark.server import ServerConfig, serve
+from articulation_vector_db_api_spark.sources.readers import table_absent
 from tests.conftest import SF_SMALL, assert_same_serving_index
 
 _WORDS = ("transfer credit course degree college program student "
@@ -349,3 +350,35 @@ def test_uri_table_is_served_after_an_ingest(spark, tmp_path):
         server.shutdown()
         server.server_close()
         served._invalidate()
+
+
+def test_absent_uri_table_answers_from_data_dir(spark, tmp_path):
+    """An absent ``file://`` table is an empty one, like an absent local
+    path: /search answers from ``data_dir``'s raw documents, and the
+    HTTP tier starts without warming it. Other URIs are never known to
+    be absent."""
+    path = tmp_path / "no-such-table"
+    uri = "file://" + str(path)
+    assert table_absent(uri) and table_absent(str(path))
+    assert not table_absent("file://" + str(tmp_path))
+    assert not table_absent("s3a://bucket/no-such-table")
+    want = EngineAPI(spark=spark, data_dir=SF_SMALL).search("transfer credit", 3)
+    assert want["total_results"] == 3
+    for table in (uri, str(path)):
+        api = EngineAPI(spark=spark, data_dir=SF_SMALL, chunk_table=table)
+        assert api.search("transfer credit", 3) == want
+        assert api._serving is None
+
+    served = EngineAPI(spark=spark, data_dir=SF_SMALL)
+    server = serve(served, ServerConfig(table_path=uri))
+    try:
+        assert served.chunk_table == uri and served._serving is None
+        req = urllib.request.Request(
+            "http://127.0.0.1:%d/search" % server.server_address[1],
+            data=json.dumps({"query": "transfer credit", "top_k": 3}).encode(),
+            headers={"Content-Type": "application/json"})
+        with urllib.request.urlopen(req) as r:
+            assert json.loads(r.read()) == want
+    finally:
+        server.shutdown()
+        server.server_close()

@@ -1164,11 +1164,13 @@ def barrier_violations(plan: str) -> list[str]:
 
 def normalize_plan(plan: str) -> str:
     """A formatted plan without what differs between two builds of the
-    same query: expression ids (``#12``, ``#12L``) and ``[plan_id=N]``
-    tags, which count up per session, the Spark application id in
-    scratch-table paths, and the checkout directory. The dumps of two
-    checkouts then compare byte for byte."""
+    same query: expression ids (``#12``, ``#12L``), ``[plan_id=N]``
+    tags and RDD ids (``MapPartitionsRDD[349]``), which count up per
+    session, the Spark application id in scratch-table paths, and the
+    checkout directory. The dumps of two checkouts then compare byte
+    for byte."""
     plan = re.sub(r"\[plan_id=\d+\]", "", re.sub(r"#\d+L?", "", plan))
+    plan = re.sub(r"RDD\[\d+\]", "RDD[]", plan)
     plan = re.sub(r"local-\d+", "local-<app>", plan)
     return plan.replace(ROOT, "<repo>")
 
