@@ -15,6 +15,8 @@ rows it has just written; it does not re-read the table.
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,11 +54,10 @@ class EngineAPI:
     _serving_files: dict | None = field(
         default=None, repr=False, compare=False
     )
-    # serve() runs this API under ThreadingHTTPServer: without the
-    # lock, two /search threads racing a post-ingest invalidation both
-    # see _serving None and both warm() — one build wins the slot, the
-    # loser's persisted projection leaks in the Spark cache forever
-    # (r11 self-review finding)
+    # serve() runs searches that need Spark on executor threads:
+    # without the lock, two of them racing a post-ingest invalidation
+    # both see _serving None and both warm() — one build wins the slot,
+    # the loser's persisted projection leaks in the Spark cache forever
     _warm_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False, compare=False
     )
@@ -64,6 +65,10 @@ class EngineAPI:
     # from the index of the table as the previous ingest left it
     _ingest_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False, compare=False
+    )
+    # per thread: the index pinned() holds for that thread's searches
+    _pin: threading.local = field(
+        default_factory=threading.local, repr=False, compare=False
     )
 
     def warm(self, table_path: str | None = None) -> "EngineAPI":
@@ -93,7 +98,28 @@ class EngineAPI:
         self._serving = None
         self._serving_files = None
 
+    def local_index(self) -> ServingIndex | None:
+        """The driver-resident serving index, when the API holds one: a
+        search over it starts no Spark job."""
+        serving = self._serving
+        return serving if isinstance(serving, ServingIndex) else None
+
+    @contextmanager
+    def pinned(self, index: ServingIndex) -> Iterator[None]:
+        """Searches made on this thread inside the block score ``index``.
+        A caller that got it from :meth:`local_index` can then search
+        with no Spark job, though a concurrent ingest may drop or
+        replace ``_serving`` between that check and the search."""
+        self._pin.index = index
+        try:
+            yield
+        finally:
+            self._pin.index = None
+
     def _topk(self, query: str, top_k: int) -> DataFrame | list:
+        pinned = getattr(self._pin, "index", None)
+        if pinned is not None:
+            return topk_search_cached(pinned, query, top_k)
         if self.chunk_table and (
             self._serving is not None or not table_absent(self.chunk_table)
         ):

@@ -371,8 +371,14 @@ def _pattern_dots(patterns: np.ndarray, qv: list[float]) -> np.ndarray:
     dots = np.empty(patterns.shape[1])
     for start in range(0, dots.size, _FOLD_COLUMNS):
         prod = patterns[:, start:start + _FOLD_COLUMNS] * q
-        np.add.accumulate(prod, axis=0, out=prod)
-        np.add(prod[-1], 0.0, out=dots[start:start + _FOLD_COLUMNS])
+        if prod.shape[1] == 1:  # numpy would sum a lone column pairwise
+            acc = 0.0
+            for v in prod[:, 0].tolist():
+                acc += v
+            dots[start] = acc
+        else:
+            np.add.reduce(prod, axis=0, initial=0.0,
+                          out=dots[start:start + _FOLD_COLUMNS])
     return dots
 
 
@@ -383,16 +389,15 @@ def _local_topk(index: ServingIndex, query: str, top_k: int) -> list[Row]:
     ``(raw DESC, id ASC)``.
 
     The fold (:func:`_pattern_dots`) is one multiply and one
-    ``np.add.accumulate`` down the PATTERN_DIM axis per block of
-    :data:`_FOLD_COLUMNS` columns, not two numpy calls per dimension:
-    numpy releases the GIL in each call on more than ~500 elements, so
-    a per-dimension loop makes every request give up and re-take the
-    driver's GIL 64 times while the HTTP threads contend for it. The
-    accumulate is exact: it is sequential by definition, so each partial
-    sum is the fold's (``np.add.reduce`` is not: it sums pairwise when
-    the summed axis ends up innermost, as for a one-row index), and the
-    final ``+ 0.0`` turns an all-zero column's ``-0.0`` into the
-    fold's ``0.0``."""
+    ``np.add.reduce`` down the PATTERN_DIM axis per block of
+    :data:`_FOLD_COLUMNS` columns, not two numpy calls per dimension,
+    so a request costs a constant number of numpy calls. Reducing the
+    outer axis of a block two or more columns wide adds each row into
+    the column sums in order, which is the left fold, and ``initial=0.0``
+    starts each sum from the fold's ``0.0``, so an all-zero column's
+    ``-0.0`` products sum to ``0.0``. A block of one column is folded
+    in Python: numpy reduces a single contiguous column pairwise, which
+    rounds differently."""
     if top_k < 0:
         raise ValueError(f"top_k must be >= 0, got {top_k}")
     qv, qnorm = query_vector_literals(query, PATTERN_DIM)

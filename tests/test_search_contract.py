@@ -233,6 +233,32 @@ def test_pattern_dots_bitwise_equal_left_fold(n):
         assert np.array_equal(got.view(np.int64), want.view(np.int64))
 
 
+@pytest.mark.parametrize("n", [1, 2, 4096, 4097, 8193])
+def test_pattern_dots_block_widths_equal_python_fold(n):
+    """Whatever width the last block of columns has, one column
+    included (numpy would sum it pairwise), each dot is the Python left
+    fold from 0.0 bit for bit, and an all-zero column against a query
+    whose every component is negative sums its ``-0.0`` products to
+    ``0.0``, not ``-0.0``."""
+    rng = np.random.default_rng(n)
+    # magnitudes spread over 16 decades, so the order of adds shows
+    patterns = rng.standard_normal((PATTERN_DIM, n)) * 10.0 ** rng.integers(
+        -8, 8, (PATTERN_DIM, n))
+    patterns[:, 0] = 0.0
+    mixed = rng.standard_normal(PATTERN_DIM).tolist()
+    negative = [-abs(v) - 1e-3 for v in mixed]
+    for q in (mixed, negative):
+        got = search_mod._pattern_dots(patterns, q)
+        want = []
+        for col in patterns.T.tolist():
+            acc = 0.0
+            for p, x in zip(col, q):
+                acc += p * x
+            want.append(acc)
+        assert got.tobytes() == np.array(want).tobytes()
+    assert got[0] == 0.0 and not np.signbit(got[0])
+
+
 def test_search_orders_rounded_score_ties_by_id(spark, tmp_path):
     """Two rows whose raw scores differ but round to the same 6-dp score
     come back ``(score DESC, id ASC)`` from EngineAPI.search, over the
