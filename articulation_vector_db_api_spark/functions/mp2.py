@@ -32,13 +32,15 @@ inverse-dB note, functions/vorbis.py):
   ladders stop at 32767/127). §2.4.2.3's selection rule maps
   (sampling rate, per-channel bitrate) to the table. The witness
   encoder and the decoder share them, so roundtrips are bit-sound.
-- the 512-tap prototype window is an engine-designed Kaiser-windowed
-  sinc (the spec's Table 3-C.1 is a literal 512-value table with no
-  published closed form). Analysis and synthesis share the prototype,
-  the cascade's gain/delay are calibrated deterministically at import,
-  and measured reconstruction is ~60 dB for in-band audio — third-party
-  streams decode through a slightly different (but alias-cancelling)
-  reconstruction filter than a spec-table decoder would use.
+- the 512-tap prototype window is an engine design: frequency-sampled
+  with a square-root-raised-cosine transition and half-sample linear
+  phase (see _prototype; the spec's Table 3-C.1 is a literal 512-value
+  table with no published closed form). Analysis and synthesis share
+  the prototype, the cascade's gain/delay are calibrated
+  deterministically at import, and measured reconstruction is ~60 dB
+  for in-band audio — third-party streams decode through a slightly
+  different (but alias-cancelling) reconstruction filter than a
+  spec-table decoder would use.
 
 Reference behavior parity: the reference system (/root/reference/
 main.py) is PDF-only; MPEG audio is engine frontier surface for
@@ -184,11 +186,29 @@ def _analyze(x: np.ndarray) -> np.ndarray:
     return out
 
 
+# granules per synthesis GEMM: one Layer I frame, a third of a Layer II one
+_SYNTH_BLOCK = 12
+
+
 def _synthesize(s: np.ndarray) -> np.ndarray:
-    """Subband samples S[32, m] -> PCM overlap-add (length 32·m+512)."""
+    """Subband samples S[32, m] -> PCM overlap-add (length 32·m+512).
+
+    Causal bit for bit: output sample t depends only on the granules
+    that reach it (m ≤ t/32), whatever follows them and whatever the
+    BLAS thread count. A whole-stream (512×32)·(32×m) GEMM does not
+    give that — BLAS may split a large product across threads at
+    m-dependent points, so a granule's rounding would depend on the
+    stream's length. Every product here is one zero-padded block of
+    _SYNTH_BLOCK granules, the same shape whatever the stream, and
+    below OpenBLAS's threading threshold, so it runs on one thread."""
     n_gran = s.shape[1]
+    n_pad = -(-n_gran // _SYNTH_BLOCK) * _SYNTH_BLOCK
+    sp = np.zeros((_BANDS, n_pad), dtype=np.float64)
+    sp[:, :n_gran] = s
+    contrib = np.empty((_TAPS, n_pad), dtype=np.float64)
+    for b in range(0, n_pad, _SYNTH_BLOCK):
+        contrib[:, b : b + _SYNTH_BLOCK] = _BANK.T @ sp[:, b : b + _SYNTH_BLOCK]
     y = np.zeros(n_gran * _BANDS + _TAPS, dtype=np.float64)
-    contrib = _BANK.T @ s  # (512, m)
     for m in range(n_gran):
         y[m * _BANDS : m * _BANDS + _TAPS] += contrib[:, m]
     return y
@@ -538,7 +558,11 @@ def decode_mp2(b: bytes) -> tuple[int, int, np.ndarray]:
     reconstruct through per-channel scalefactors. Raises ValueError
     for malformed streams (per-row fault isolation),
     NotImplementedError for honest codec gates (Layer I/III
-    samples)."""
+    samples).
+
+    Causal: a stream prefix decodes to the same leading samples as
+    the whole stream, bit for bit, except the last _TAPS samples the
+    following frames overlap (see _synthesize)."""
     from .mp3 import _parse_header, _skip_id3v2
 
     b = bytes(b)
@@ -831,7 +855,11 @@ def decode_mp1(b: bytes) -> tuple[int, int, np.ndarray]:
     """Full MP1 (Layer I) sample decode -> (rate, channels, float PCM
     (ch, n)), including joint (intensity) stereo (r12). ValueError for
     malformed streams, NotImplementedError for honest gates (other
-    layers)."""
+    layers).
+
+    Causal: a stream prefix decodes to the same leading samples as
+    the whole stream, bit for bit, except the last _TAPS samples the
+    following frames overlap (see _synthesize)."""
     from .mp3 import _parse_header, _skip_id3v2
 
     b = bytes(b)

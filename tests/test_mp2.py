@@ -5,6 +5,12 @@ mutation-fuzz ValueError-only contract."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -456,3 +462,42 @@ def test_id3_tagged_streams_decode_both_layers():
         r1, c1, p1 = dec(id3v2 + es + id3v1)
         assert (r0, c0) == (r1, c1)
         assert np.array_equal(p0, p1)
+
+
+_DECODE_HASH = """
+import hashlib, sys
+from articulation_vector_db_api_spark.functions import mp2
+dec = getattr(mp2, sys.argv[1])
+with open(sys.argv[2], "rb") as f:
+    print(hashlib.sha256(dec(f.read())[2].tobytes()).hexdigest())
+"""
+
+
+def test_decode_bits_independent_of_blas_threads(tmp_path):
+    """Synthesis must not depend on how BLAS partitions a product: the
+    driver and pytest run numpy at the default BLAS thread count,
+    Spark executors at one (session.py). The same stream decodes to
+    the same PCM bytes in a child at one thread, in a child at two,
+    and in this process, for both layers."""
+    rate = 48000
+    x = np.stack([_tone(8 * mp2.FRAME_SAMPLES, rate),
+                  0.6 * _tone(8 * mp2.FRAME_SAMPLES, rate, f1=330.0)])
+    repo = str(Path(mp2.__file__).resolve().parents[2])
+    for enc, dec in ((mp2.encode_mp2, "decode_mp2"),
+                     (mp2.encode_mp1, "decode_mp1")):
+        stream = tmp_path / f"{dec}.bin"
+        stream.write_bytes(enc(x, rate, 192))
+        want = hashlib.sha256(
+            getattr(mp2, dec)(stream.read_bytes())[2].tobytes()
+        ).hexdigest()
+        for threads in ("1", "2"):
+            env = dict(os.environ, OPENBLAS_NUM_THREADS=threads,
+                       OMP_NUM_THREADS=threads,
+                       PYTHONPATH=os.pathsep.join(
+                           filter(None, [repo, os.environ.get("PYTHONPATH")])))
+            p = subprocess.run(
+                [sys.executable, "-c", _DECODE_HASH, dec, str(stream)],
+                env=env, capture_output=True, text=True, timeout=120,
+            )
+            assert p.returncode == 0, p.stderr
+            assert p.stdout.strip() == want, (dec, threads)
