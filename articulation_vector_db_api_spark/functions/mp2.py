@@ -208,9 +208,14 @@ def _synthesize(s: np.ndarray) -> np.ndarray:
     contrib = np.empty((_TAPS, n_pad), dtype=np.float64)
     for b in range(0, n_pad, _SYNTH_BLOCK):
         contrib[:, b : b + _SYNTH_BLOCK] = _BANK.T @ sp[:, b : b + _SYNTH_BLOCK]
+    # Overlap-add as _TAPS/_BANDS shifted block adds: row q of y as
+    # (·, 32) takes granule m = q − k from block k. Running k downwards
+    # adds each sample's granules in increasing m, the order of a
+    # per-granule loop, so the sums round the same.
     y = np.zeros(n_gran * _BANDS + _TAPS, dtype=np.float64)
-    for m in range(n_gran):
-        y[m * _BANDS : m * _BANDS + _TAPS] += contrib[:, m]
+    rows = y.reshape(-1, _BANDS)
+    for k in range(_TAPS // _BANDS - 1, -1, -1):
+        rows[k : k + n_gran] += contrib[k * _BANDS : (k + 1) * _BANDS, :n_gran].T
     return y
 
 

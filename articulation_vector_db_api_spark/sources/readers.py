@@ -248,32 +248,23 @@ def spread_input(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(n)
 
 
-def per_doc_map(
-    spark: SparkSession,
-    sf_dir: str,
-    cols: tuple[str, ...],
+def map_rows(
+    df: DataFrame,
     schema: T.StructType | str,
     row_fn: Callable[..., tuple],
 ) -> DataFrame:
-    """One output row per ``documents`` row, sorted by ``doc_id``:
-    ``row_fn(*values)`` over the ``cols`` of each row, run inside an
-    Arrow-batched map. ``schema`` (a StructType or a DDL string such as
+    """One output row per row of ``df``: ``row_fn(*values)`` over its
+    columns, in ``df.columns`` order, run inside an Arrow-batched map.
+    ``schema`` (a StructType or a DDL string such as
     ``"doc_id bigint, n bigint"``) declares the tuple ``row_fn``
     returns, field by field.
-
-    The scan goes through :func:`spread_input`, then the map's output
-    goes through a ``repartition("doc_id")`` shuffle barrier before the
-    sort. Without it the range exchange's sampling job re-executes the
-    whole narrow subtree, so the map would run twice; the materialized
-    shuffle is reused by both the sampling and the sort job, so it runs
-    once (r16). The barrier carries the map's output rows (one per
-    doc), never a decoded payload.
 
     The map function is named ``batches`` because the formatted plan
     prints it: ``MapInPandas`` shows ``batches(doc_id#...)``.
     """
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
+    cols = df.columns
     names = schema.fieldNames()
 
     def batches(it):
@@ -283,14 +274,50 @@ def per_doc_map(
             rows = [row_fn(*vals) for vals in zip(*(pdf[c] for c in cols))]
             yield pd.DataFrame(rows, columns=names)
 
+    return df.mapInPandas(batches, schema)
+
+
+def scan_docs(spark: SparkSession, sf_dir: str, cols: tuple[str, ...]) -> DataFrame:
+    """The ``cols`` of the ``documents`` table, fanned out by
+    :func:`spread_input` so a per-doc map runs on every core."""
     return (
         load_table(spark, sf_dir, "documents")
         .select(*cols)
         .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")
-        .orderBy("doc_id")
     )
+
+
+def sort_by_doc(df: DataFrame) -> DataFrame:
+    """``df`` sorted by ``doc_id``, through a ``repartition("doc_id")``
+    shuffle barrier placed right after an Arrow map.
+
+    Without the barrier the range exchange's sampling job re-executes
+    the whole narrow subtree, so the map would run twice; the
+    materialized shuffle is reused by both the sampling and the sort
+    job, so it runs once (r16). The barrier carries the map's output
+    rows (one per doc), never a decoded payload.
+
+    A map over a stored table reads it straight, with no round-robin
+    spread first: the table is written distributed (one file per build
+    task), so its scan already yields about core-count splits (r16).
+    """
+    return df.repartition("doc_id").orderBy("doc_id")
+
+
+def per_doc_map(
+    spark: SparkSession,
+    sf_dir: str,
+    cols: tuple[str, ...],
+    schema: T.StructType | str,
+    row_fn: Callable[..., tuple],
+) -> DataFrame:
+    """One output row per ``documents`` row, sorted by ``doc_id``:
+    ``row_fn(*values)`` over the ``cols`` of each row. It is the
+    :func:`scan_docs` scan, then the :func:`map_rows` map (whose
+    ``schema`` declares the tuple ``row_fn`` returns), then the
+    :func:`sort_by_doc` barrier and sort.
+    """
+    return sort_by_doc(map_rows(scan_docs(spark, sf_dir, cols), schema, row_fn))
 
 
 def load_binary_corpus(spark: SparkSession, directory: str, glob: str = "*.pdf") -> DataFrame:

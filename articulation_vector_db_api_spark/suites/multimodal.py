@@ -18,7 +18,14 @@ from pyspark.sql.window import Window
 from ..functions.embedding import hex_byte_sql_duckdb
 from ..operators.multimodal import attach_binary_payload, extract_binary_features
 from ..registry import register
-from ..sources.readers import load_table, per_doc_map, spread_input
+from ..sources.readers import (
+    load_table,
+    map_rows,
+    per_doc_map,
+    scan_docs,
+    sort_by_doc,
+    spread_input,
+)
 
 
 @register(
@@ -2491,10 +2498,10 @@ def multimodal_mp1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 verdict flagged in-query witness encoding as bench distortion
     (the reference PCM for the SNR check is regenerated in-map: two
     numpy sines, negligible next to the decode)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.mp2 import decode_mp1
+    from ..functions.mp3 import parse_mp3
 
     schema = T.StructType(
         [
@@ -2510,64 +2517,46 @@ def multimodal_mp1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    n = 1280  # + 1024 cascade cover = exactly 6 Layer I frames
 
-        from ..functions.mp2 import decode_mp1
-        from ..functions.mp3 import parse_mp3
-
-        n = 1280  # + 1024 cascade cover = exactly 6 Layer I frames
-        for pdf in it:
-            rows = []
-            for doc_id, enc in zip(pdf["doc_id"], pdf["es"]):
-                i = int(doc_id)
-                rate = 48000 if i % 2 == 0 else 32000
-                bitrate = (96, 192, 320)[i % 3]
-                x = _mp1_witness_pcm(i, n)
-                enc = bytes(enc)
-                meta = parse_mp3(enc)  # structural cross-check
-                r, ch, pcm = decode_mp1(enc)
-                ref = x if x.ndim == 2 else x[None, :]
-                if (
-                    r != rate
-                    or ch != ref.shape[0]
-                    or meta["layer"] != 1
-                    or meta["sample_rate"] != rate
-                    or meta["bitrate_kbps"] != bitrate
-                    or pcm.shape[1] != meta["samples"]
-                ):
-                    raise ValueError("MP1 roundtrip metadata mismatch")
-                got = pcm[:, :n]
-                err = got - ref
-                snr = 10 * np.log10(
-                    (ref**2).sum() / max((err**2).sum(), 1e-30)
-                )
-                e_ratio = (got**2).sum() / (ref**2).sum()
-                rows.append(
-                    (
-                        doc_id,
-                        ch,
-                        rate,
-                        bitrate,
-                        meta["n_frames"],
-                        pcm.shape[1],
-                        meta["duration_ms"],
-                        int(snr > 20.0),
-                        int(abs(e_ratio - 1.0) < 0.10),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def row(doc_id, enc):
+        i = int(doc_id)
+        rate = 48000 if i % 2 == 0 else 32000
+        bitrate = (96, 192, 320)[i % 3]
+        x = _mp1_witness_pcm(i, n)
+        enc = bytes(enc)
+        meta = parse_mp3(enc)  # structural cross-check
+        r, ch, pcm = decode_mp1(enc)
+        ref = x if x.ndim == 2 else x[None, :]
+        if (
+            r != rate
+            or ch != ref.shape[0]
+            or meta["layer"] != 1
+            or meta["sample_rate"] != rate
+            or meta["bitrate_kbps"] != bitrate
+            or pcm.shape[1] != meta["samples"]
+        ):
+            raise ValueError("MP1 roundtrip metadata mismatch")
+        got = pcm[:, :n]
+        err = got - ref
+        snr = 10 * np.log10(
+            (ref**2).sum() / max((err**2).sum(), 1e-30)
+        )
+        e_ratio = (got**2).sum() / (ref**2).sum()
+        return (
+            doc_id,
+            ch,
+            rate,
+            bitrate,
+            meta["n_frames"],
+            pcm.shape[1],
+            meta["duration_ms"],
+            int(snr > 20.0),
+            int(abs(e_ratio - 1.0) < 0.10),
+        )
 
     store = _mp1_witness_store(spark, sf_dir)
-    return (
-        spark.read.parquet(store)
-        # no repartition: the store is written distributed (one file
-        # per build task) and the scan packer already yields ~core-count
-        # splits, so the round-robin shuffle was a pure extra stage (r16)
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return sort_by_doc(map_rows(spark.read.parquet(store), schema, row))
 
 
 def _mp1_witness_pcm(i: int, n: int = 1280):
@@ -2596,6 +2585,8 @@ def _mp1_witness_store(spark: SparkSession, sf_dir: str) -> str:
     def _build(p: str) -> None:
         from pyspark.sql import types as T
 
+        from ..functions.mp2 import encode_mp1
+
         out_schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -2603,29 +2594,15 @@ def _mp1_witness_store(spark: SparkSession, sf_dir: str) -> str:
             ]
         )
 
-        def encode_batches(it):
-            import pandas as pd
+        def encode(doc_id):
+            i = int(doc_id)
+            rate = 48000 if i % 2 == 0 else 32000
+            bitrate = (96, 192, 320)[i % 3]
+            x = _mp1_witness_pcm(i)
+            return (i, encode_mp1(x, rate, bitrate))
 
-            from ..functions.mp2 import encode_mp1
-
-            for pdf in it:
-                rows = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    rate = 48000 if i % 2 == 0 else 32000
-                    bitrate = (96, 192, 320)[i % 3]
-                    x = _mp1_witness_pcm(i)
-                    rows.append((i, encode_mp1(x, rate, bitrate)))
-                yield pd.DataFrame(rows, columns=["doc_id", "es"])
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .transform(spread_input, sf_dir, "documents")
-            .mapInPandas(encode_batches, out_schema)
-            .write.mode("overwrite")
-            .parquet(p)
-        )
+        docs = scan_docs(spark, sf_dir, ("doc_id",))
+        map_rows(docs, out_schema, encode).write.mode("overwrite").parquet(p)
 
     return _build_once(spark, "mp1_witness_es", sf_dir, _build)
 
@@ -2683,10 +2660,9 @@ def multimodal_mpeg1_pframe_decode(
     fixture-build cost, not query cost, so the benched number reflects
     the DECODE path (r11 verdict 'What's wrong' #1; the reference
     frames for the SNR check regenerate in-map from numpy slices)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.mpeg1 import decode_m1v
 
     schema = T.StructType(
         [
@@ -2704,57 +2680,38 @@ def multimodal_mpeg1_pframe_decode(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    h = w = 32
+    n_frames = 4
 
-        from ..functions.mpeg1 import decode_m1v
-
-        h = w = 32
-        n_frames = 4
-        for pdf in it:
-            rows = []
-            for doc_id, es, intra_len in zip(
-                pdf["doc_id"], pdf["es"], pdf["intra_len"]
-            ):
-                i = int(doc_id)
-                qscale = (3, 4, 6)[i % 3]
-                f_code = 2 if i % 4 == 0 else 1
-                es = bytes(es)
-                frames = _mpeg1_pframe_frames(i)
-                meta, dec = decode_m1v(es)
-                if (
-                    meta["width"], meta["height"], meta["n_frames"]
-                ) != (w, h, n_frames):
-                    raise ValueError("MPEG-1 P roundtrip metadata mismatch")
-                ref = np.stack(frames).astype(np.float64)
-                got = np.stack(dec).astype(np.float64)
-                err = got - ref
-                snr = 10 * np.log10(
-                    (ref**2).sum() / max((err**2).sum(), 1e-30)
-                )
-                e_ratio = (got**2).sum() / (ref**2).sum()
-                rows.append(
-                    (
-                        doc_id, w, h, n_frames,
-                        meta["n_i"], meta["n_p"],
-                        qscale, f_code,
-                        int(snr > 17.0),
-                        int(abs(e_ratio - 1.0) < 0.12),
-                        int(len(es) < int(intra_len)),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def row(doc_id, es, intra_len):
+        i = int(doc_id)
+        qscale = (3, 4, 6)[i % 3]
+        f_code = 2 if i % 4 == 0 else 1
+        es = bytes(es)
+        frames = _mpeg1_pframe_frames(i)
+        meta, dec = decode_m1v(es)
+        if (
+            meta["width"], meta["height"], meta["n_frames"]
+        ) != (w, h, n_frames):
+            raise ValueError("MPEG-1 P roundtrip metadata mismatch")
+        ref = np.stack(frames).astype(np.float64)
+        got = np.stack(dec).astype(np.float64)
+        err = got - ref
+        snr = 10 * np.log10(
+            (ref**2).sum() / max((err**2).sum(), 1e-30)
+        )
+        e_ratio = (got**2).sum() / (ref**2).sum()
+        return (
+            doc_id, w, h, n_frames,
+            meta["n_i"], meta["n_p"],
+            qscale, f_code,
+            int(snr > 17.0),
+            int(abs(e_ratio - 1.0) < 0.12),
+            int(len(es) < int(intra_len)),
+        )
 
     store = _mpeg1_pframe_store(spark, sf_dir)
-    return (
-        spark.read.parquet(store)
-        # no repartition: the store is written distributed (one file
-        # per build task) and the scan packer already yields ~core-count
-        # splits, so the round-robin shuffle was a pure extra stage (r16)
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return sort_by_doc(map_rows(spark.read.parquet(store), schema, row))
 
 
 def _mpeg1_pframe_frames(i: int) -> list:
@@ -2787,6 +2744,8 @@ def _mpeg1_pframe_store(spark: SparkSession, sf_dir: str) -> str:
     def _build(p: str) -> None:
         from pyspark.sql import types as T
 
+        from ..functions.mpeg1 import encode_m1v
+
         out_schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -2795,36 +2754,18 @@ def _mpeg1_pframe_store(spark: SparkSession, sf_dir: str) -> str:
             ]
         )
 
-        def encode_batches(it):
-            import pandas as pd
+        def encode(doc_id):
+            i = int(doc_id)
+            qscale = (3, 4, 6)[i % 3]
+            f_code = 2 if i % 4 == 0 else 1
+            frames = _mpeg1_pframe_frames(i)
+            es = encode_m1v(
+                frames, qscale=qscale, p_frames=True, f_code=f_code
+            )
+            return (i, es, len(encode_m1v(frames, qscale=qscale)))
 
-            from ..functions.mpeg1 import encode_m1v
-
-            for pdf in it:
-                rows = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    qscale = (3, 4, 6)[i % 3]
-                    f_code = 2 if i % 4 == 0 else 1
-                    frames = _mpeg1_pframe_frames(i)
-                    es = encode_m1v(
-                        frames, qscale=qscale, p_frames=True, f_code=f_code
-                    )
-                    rows.append(
-                        (i, es, len(encode_m1v(frames, qscale=qscale)))
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "es", "intra_len"]
-                )
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .transform(spread_input, sf_dir, "documents")
-            .mapInPandas(encode_batches, out_schema)
-            .write.mode("overwrite")
-            .parquet(p)
-        )
+        docs = scan_docs(spark, sf_dir, ("doc_id",))
+        map_rows(docs, out_schema, encode).write.mode("overwrite").parquet(p)
 
     return _build_once(spark, "mpeg1_pframe_es", sf_dir, _build)
 
@@ -2874,10 +2815,9 @@ def multimodal_mpeg1_bframe_decode(
     encoded IBB…P streams come from a once-per-app parquet fixture
     (_mpeg1_bframe_store, r12) so the measured work is the DECODE +
     reorder path; the SNR reference frames regenerate in-map."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.mpeg1 import decode_m1v
 
     schema = T.StructType(
         [
@@ -2893,53 +2833,34 @@ def multimodal_mpeg1_bframe_decode(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    h = w = 32
 
-        from ..functions.mpeg1 import decode_m1v
-
-        h = w = 32
-        for pdf in it:
-            rows = []
-            for doc_id, es, intra_len in zip(
-                pdf["doc_id"], pdf["es"], pdf["intra_len"]
-            ):
-                i = int(doc_id)
-                qscale = (3, 4, 6)[i % 3]
-                es = bytes(es)
-                frames = _mpeg1_bframe_frames(i)
-                meta, dec = decode_m1v(es)
-                if (meta["width"], meta["height"]) != (w, h):
-                    raise ValueError("MPEG-1 B roundtrip metadata mismatch")
-                ref = np.stack(frames).astype(np.float64)
-                got = np.stack(dec).astype(np.float64)
-                err = got - ref
-                snr = 10 * np.log10(
-                    (ref**2).sum() / max((err**2).sum(), 1e-30)
-                )
-                e_ratio = (got**2).sum() / (ref**2).sum()
-                rows.append(
-                    (
-                        doc_id, meta["n_frames"],
-                        meta["n_i"], meta["n_p"], meta["n_b"],
-                        qscale,
-                        int(snr > 17.0),
-                        int(abs(e_ratio - 1.0) < 0.12),
-                        int(len(es) < int(intra_len)),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def row(doc_id, es, intra_len):
+        i = int(doc_id)
+        qscale = (3, 4, 6)[i % 3]
+        es = bytes(es)
+        frames = _mpeg1_bframe_frames(i)
+        meta, dec = decode_m1v(es)
+        if (meta["width"], meta["height"]) != (w, h):
+            raise ValueError("MPEG-1 B roundtrip metadata mismatch")
+        ref = np.stack(frames).astype(np.float64)
+        got = np.stack(dec).astype(np.float64)
+        err = got - ref
+        snr = 10 * np.log10(
+            (ref**2).sum() / max((err**2).sum(), 1e-30)
+        )
+        e_ratio = (got**2).sum() / (ref**2).sum()
+        return (
+            doc_id, meta["n_frames"],
+            meta["n_i"], meta["n_p"], meta["n_b"],
+            qscale,
+            int(snr > 17.0),
+            int(abs(e_ratio - 1.0) < 0.12),
+            int(len(es) < int(intra_len)),
+        )
 
     store = _mpeg1_bframe_store(spark, sf_dir)
-    return (
-        spark.read.parquet(store)
-        # no repartition: the store is written distributed (one file
-        # per build task) and the scan packer already yields ~core-count
-        # splits, so the round-robin shuffle was a pure extra stage (r16)
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return sort_by_doc(map_rows(spark.read.parquet(store), schema, row))
 
 
 def _mpeg1_bframe_frames(i: int) -> list:
@@ -2973,6 +2894,8 @@ def _mpeg1_bframe_store(spark: SparkSession, sf_dir: str) -> str:
     def _build(p: str) -> None:
         from pyspark.sql import types as T
 
+        from ..functions.mpeg1 import encode_m1v
+
         out_schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -2981,36 +2904,18 @@ def _mpeg1_bframe_store(spark: SparkSession, sf_dir: str) -> str:
             ]
         )
 
-        def encode_batches(it):
-            import pandas as pd
+        def encode(doc_id):
+            i = int(doc_id)
+            qscale = (3, 4, 6)[i % 3]
+            nb = 2 if i % 2 == 0 else 1
+            frames = _mpeg1_bframe_frames(i)
+            es = encode_m1v(
+                frames, qscale=qscale, p_frames=True, b_frames=nb
+            )
+            return (i, es, len(encode_m1v(frames, qscale=qscale)))
 
-            from ..functions.mpeg1 import encode_m1v
-
-            for pdf in it:
-                rows = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    qscale = (3, 4, 6)[i % 3]
-                    nb = 2 if i % 2 == 0 else 1
-                    frames = _mpeg1_bframe_frames(i)
-                    es = encode_m1v(
-                        frames, qscale=qscale, p_frames=True, b_frames=nb
-                    )
-                    rows.append(
-                        (i, es, len(encode_m1v(frames, qscale=qscale)))
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "es", "intra_len"]
-                )
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .transform(spread_input, sf_dir, "documents")
-            .mapInPandas(encode_batches, out_schema)
-            .write.mode("overwrite")
-            .parquet(p)
-        )
+        docs = scan_docs(spark, sf_dir, ("doc_id",))
+        map_rows(docs, out_schema, encode).write.mode("overwrite").parquet(p)
 
     return _build_once(spark, "mpeg1_bframe_es", sf_dir, _build)
 
@@ -3062,10 +2967,9 @@ def multimodal_mpeg2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     — encoded streams come from a once-per-app parquet fixture
     (_mpeg2_witness_store), the decode map is Arrow-batched and
     narrow, video bytes never shuffle, one stats row per doc."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.mpeg2 import decode_m2v
 
     schema = T.StructType(
         [
@@ -3084,56 +2988,37 @@ def multimodal_mpeg2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    h = w = 32
+    n_frames = 4
 
-        from ..functions.mpeg2 import decode_m2v
-
-        h = w = 32
-        n_frames = 4
-        for pdf in it:
-            rows = []
-            for doc_id, es, intra_len in zip(
-                pdf["doc_id"], pdf["es"], pdf["intra_len"]
-            ):
-                i = int(doc_id)
-                es = bytes(es)
-                frames = _mpeg2_witness_frames(i)
-                meta, dec = decode_m2v(es)
-                if (
-                    meta["width"], meta["height"], meta["n_frames"]
-                ) != (w, h, n_frames):
-                    raise ValueError("MPEG-2 roundtrip metadata mismatch")
-                ref = np.stack(frames).astype(np.float64)
-                got = np.stack(dec).astype(np.float64)
-                snr = 10 * np.log10(
-                    (ref**2).sum()
-                    / max(((got - ref) ** 2).sum(), 1e-30)
-                )
-                e_ratio = (got**2).sum() / (ref**2).sum()
-                rows.append(
-                    (
-                        doc_id, w, h, n_frames,
-                        meta["n_i"], meta["n_p"],
-                        i % 2, meta["dc_precision"],
-                        meta["progressive"],  # = fpfd = 1 - i % 2
-                        int(snr > 17.0),
-                        int(abs(e_ratio - 1.0) < 0.12),
-                        int(len(es) < int(intra_len)),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+    def row(doc_id, es, intra_len):
+        i = int(doc_id)
+        es = bytes(es)
+        frames = _mpeg2_witness_frames(i)
+        meta, dec = decode_m2v(es)
+        if (
+            meta["width"], meta["height"], meta["n_frames"]
+        ) != (w, h, n_frames):
+            raise ValueError("MPEG-2 roundtrip metadata mismatch")
+        ref = np.stack(frames).astype(np.float64)
+        got = np.stack(dec).astype(np.float64)
+        snr = 10 * np.log10(
+            (ref**2).sum()
+            / max(((got - ref) ** 2).sum(), 1e-30)
+        )
+        e_ratio = (got**2).sum() / (ref**2).sum()
+        return (
+            doc_id, w, h, n_frames,
+            meta["n_i"], meta["n_p"],
+            i % 2, meta["dc_precision"],
+            meta["progressive"],  # = fpfd = 1 - i % 2
+            int(snr > 17.0),
+            int(abs(e_ratio - 1.0) < 0.12),
+            int(len(es) < int(intra_len)),
+        )
 
     store = _mpeg2_witness_store(spark, sf_dir)
-    return (
-        spark.read.parquet(store)
-        # no repartition: the store is written distributed (one file
-        # per build task) and the scan packer already yields ~core-count
-        # splits, so the round-robin shuffle was a pure extra stage (r16)
-        .mapInPandas(batches, schema)
-        .repartition("doc_id")  # shuffle barrier: the range-sampling job reuses it, so the map runs ONCE (r16)
-        .orderBy("doc_id")
-    )
+    return sort_by_doc(map_rows(spark.read.parquet(store), schema, row))
 
 
 def _mpeg2_witness_frames(i: int) -> list:
@@ -3172,6 +3057,8 @@ def _mpeg2_witness_store(spark: SparkSession, sf_dir: str) -> str:
     def _build(p: str) -> None:
         from pyspark.sql import types as T
 
+        from ..functions.mpeg2 import encode_m2v
+
         out_schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -3180,48 +3067,30 @@ def _mpeg2_witness_store(spark: SparkSession, sf_dir: str) -> str:
             ]
         )
 
-        def encode_batches(it):
-            import pandas as pd
+        def encode(doc_id):
+            i = int(doc_id)
+            # §7.4.2.2 divides by 32 where 11172-2 divides by
+            # 16, so these codes land the SAME effective
+            # quantizer grid (6, 8, 12) under both Table 7-6
+            # columns as the MPEG-1 witness's qscale 3/4/6.
+            # Odd docs run fpfd=0 over an INTERLACED scene so
+            # field DCT + field prediction are driver-checked.
+            kw = {
+                "qscale_code": ((3, 4, 6) if i % 2 == 0
+                                else (6, 8, 10))[i % 3],
+                "q_scale_type": i % 2,
+                "dc_precision": 8 + i % 4,
+                "fpfd": 1 - i % 2,
+            }
+            frames = _mpeg2_witness_frames(i)
+            es = encode_m2v(
+                frames, p_frames=True,
+                f_code=2 if i % 4 == 0 else 1, **kw,
+            )
+            return (i, es, len(encode_m2v(frames, **kw)))
 
-            from ..functions.mpeg2 import encode_m2v
-
-            for pdf in it:
-                rows = []
-                for doc_id in pdf["doc_id"]:
-                    i = int(doc_id)
-                    # §7.4.2.2 divides by 32 where 11172-2 divides by
-                    # 16, so these codes land the SAME effective
-                    # quantizer grid (6, 8, 12) under both Table 7-6
-                    # columns as the MPEG-1 witness's qscale 3/4/6.
-                    # Odd docs run fpfd=0 over an INTERLACED scene so
-                    # field DCT + field prediction are driver-checked.
-                    kw = {
-                        "qscale_code": ((3, 4, 6) if i % 2 == 0
-                                        else (6, 8, 10))[i % 3],
-                        "q_scale_type": i % 2,
-                        "dc_precision": 8 + i % 4,
-                        "fpfd": 1 - i % 2,
-                    }
-                    frames = _mpeg2_witness_frames(i)
-                    es = encode_m2v(
-                        frames, p_frames=True,
-                        f_code=2 if i % 4 == 0 else 1, **kw,
-                    )
-                    rows.append(
-                        (i, es, len(encode_m2v(frames, **kw)))
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "es", "intra_len"]
-                )
-
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .transform(spread_input, sf_dir, "documents")
-            .mapInPandas(encode_batches, out_schema)
-            .write.mode("overwrite")
-            .parquet(p)
-        )
+        docs = scan_docs(spark, sf_dir, ("doc_id",))
+        map_rows(docs, out_schema, encode).write.mode("overwrite").parquet(p)
 
     return _build_once(spark, "mpeg2_witness_es", sf_dir, _build)
 
@@ -4455,10 +4324,9 @@ def multimodal_dhash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups survive the HAVING — the same blocking discipline as the
     text MinHash-LSH family (suites/dedup.py): candidates come from
     hash buckets, not all-pairs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.pixels import decode_pixels, encode_png
 
     schema = T.StructType(
         [
@@ -4467,33 +4335,18 @@ def multimodal_dhash_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(doc_id):
+        seed = int(doc_id) // 2
+        digest = hashlib.sha256(str(seed).encode()).digest()
+        img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
+        px = decode_pixels(
+            encode_png(img, filters=[2, 3, 4])
+        )[:, :, 0].astype(np.int64)
+        bits = (px[:, :3] > px[:, 1:]).reshape(-1)
+        dhash = int((bits * (1 << np.arange(24))).sum())
+        return (doc_id, dhash)
 
-        import numpy as np
-
-        from ..functions.pixels import decode_pixels, encode_png
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                seed = int(doc_id) // 2
-                digest = hashlib.sha256(str(seed).encode()).digest()
-                img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
-                px = decode_pixels(
-                    encode_png(img, filters=[2, 3, 4])
-                )[:, :, 0].astype(np.int64)
-                bits = (px[:, :3] > px[:, 1:]).reshape(-1)
-                dhash = int((bits * (1 << np.arange(24))).sum())
-                rows.append((doc_id, dhash))
-            yield pd.DataFrame(rows, columns=["doc_id", "dhash"])
-
-    d = load_table(spark, sf_dir, "documents")
-    hashed = (
-        d.select("doc_id")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-    )
+    hashed = map_rows(scan_docs(spark, sf_dir, ("doc_id",)), schema, row)
     return (
         hashed.groupBy("dhash")
         .agg(
@@ -4581,10 +4434,9 @@ def multimodal_phash_dct_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle keys on the 11-bit phash (never pixels), and only
     colliding groups survive the HAVING — hash-bucket blocking, not
     all-pairs, like the MinHash-LSH text family (suites/dedup.py)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.pixels import decode_pixels, encode_png
 
     schema = T.StructType(
         [
@@ -4593,41 +4445,27 @@ def multimodal_phash_dct_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    crow = np.array(_PHASH_CROW, dtype=np.int64).reshape(4, 8)
+    ccol = np.array(_PHASH_CCOL, dtype=np.int64).reshape(3, 4)
+    weights = 1 << np.arange(11)
 
-        import numpy as np
+    def row(doc_id):
+        seed = int(doc_id) // 3
+        digest = hashlib.sha256(str(seed).encode()).digest()
+        img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
+        px = decode_pixels(
+            encode_png(img, filters=[1, 4, 0])
+        )[:, :, 0].astype(np.int64)
+        coeffs = np.array(
+            [
+                (px * np.outer(crow[k // 3], ccol[k % 3])).sum()
+                for k in range(1, 12)
+            ]
+        )
+        bits = coeffs > np.median(coeffs)
+        return (doc_id, int((bits * weights).sum()))
 
-        from ..functions.pixels import decode_pixels, encode_png
-
-        crow = np.array(_PHASH_CROW, dtype=np.int64).reshape(4, 8)
-        ccol = np.array(_PHASH_CCOL, dtype=np.int64).reshape(3, 4)
-        weights = 1 << np.arange(11)
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                seed = int(doc_id) // 3
-                digest = hashlib.sha256(str(seed).encode()).digest()
-                img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
-                px = decode_pixels(
-                    encode_png(img, filters=[1, 4, 0])
-                )[:, :, 0].astype(np.int64)
-                coeffs = np.array(
-                    [
-                        (px * np.outer(crow[k // 3], ccol[k % 3])).sum()
-                        for k in range(1, 12)
-                    ]
-                )
-                bits = coeffs > np.median(coeffs)
-                rows.append((doc_id, int((bits * weights).sum())))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
-
-    d = load_table(spark, sf_dir, "documents")
-    hashed = (
-        d.select("doc_id")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-    )
+    hashed = map_rows(scan_docs(spark, sf_dir, ("doc_id",)), schema, row)
     return (
         hashed.groupBy("phash")
         .agg(
@@ -4767,12 +4605,11 @@ def pipeline_web_image_ingest(
     window → per-source ledger aggregate. The image twin of
     pipeline_web_ingest."""
     import os
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql import Window
     from pyspark.sql import types as T
 
+    from ..functions.pixels import decode_pixels
     from ..sources.warc_pyds import register_warc_source
     from .similarity import _build_once
 
@@ -4845,21 +4682,11 @@ def pipeline_web_image_ingest(
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pixels import decode_pixels
+    def row(doc_id, source, digest, payload):
+        px = decode_pixels(bytes(payload))
+        return (doc_id, source, digest, int(px.sum()))
 
-        for pdf in it:
-            rows = []
-            for doc_id, source, digest, payload in zip(
-                pdf["doc_id"], pdf["source"], pdf["digest"], pdf["payload"]
-            ):
-                px = decode_pixels(bytes(payload))
-                rows.append((doc_id, source, digest, int(px.sum())))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    decoded = staged.mapInPandas(batches, schema)
+    decoded = map_rows(staged, schema, row)
     return (
         decoded.withColumn(
             "keeper", F.min("doc_id").over(Window.partitionBy("digest"))
@@ -4936,10 +4763,9 @@ def pipeline_image_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-dependent exchange keys on the 8-byte dhash for the election
     window; gates are map-side expressions. At 100 TB the admission
     column becomes the partition key of the training-set write."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.pixels import decode_pixels, encode_png
 
     schema = T.StructType(
         [
@@ -4950,41 +4776,22 @@ def pipeline_image_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(doc_id):
+        seed = int(doc_id) // 2
+        digest = hashlib.sha256(str(seed).encode()).digest()
+        img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
+        px = decode_pixels(
+            encode_png(img, filters=[0, 1, 4])
+        )[:, :, 0].astype(np.int64)
+        bits = (px[:, :3] > px[:, 1:]).reshape(-1)
+        return (
+            doc_id,
+            int(px.max() - px.min()),
+            int(px.sum()),
+            int((bits * (1 << np.arange(24))).sum()),
+        )
 
-        import numpy as np
-
-        from ..functions.pixels import decode_pixels, encode_png
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                seed = int(doc_id) // 2
-                digest = hashlib.sha256(str(seed).encode()).digest()
-                img = np.frombuffer(digest, dtype=np.uint8).reshape(8, 4)
-                px = decode_pixels(
-                    encode_png(img, filters=[0, 1, 4])
-                )[:, :, 0].astype(np.int64)
-                bits = (px[:, :3] > px[:, 1:]).reshape(-1)
-                rows.append(
-                    (
-                        doc_id,
-                        int(px.max() - px.min()),
-                        int(px.sum()),
-                        int((bits * (1 << np.arange(24))).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-
-    d = load_table(spark, sf_dir, "documents")
-    feats = (
-        d.select("doc_id")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-    )
+    feats = map_rows(scan_docs(spark, sf_dir, ("doc_id",)), schema, row)
     quality_ok = (F.col("contrast") >= 128) & F.col("px_sum").between(
         3400, 4800
     )
@@ -5099,10 +4906,9 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one narrow map + per-row array ops, zero data
     shuffles before the presentation sort; at 100 TB each split
     resamples independently."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import types as T
+
+    from ..functions.audio import decode_wav, encode_wav
 
     schema = T.StructType(
         [
@@ -5112,32 +4918,17 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(doc_id):
+        seed = str(int(doc_id)).encode()
+        raw = (
+            hashlib.sha256(seed).digest()
+            + hashlib.sha256(seed + b":b").digest()
+        )
+        pcm = np.frombuffer(raw, dtype="<i2")
+        rate, samples = decode_wav(encode_wav(pcm, 22050))
+        return (doc_id, rate, samples[:, 0].tolist())
 
-        import numpy as np
-
-        from ..functions.audio import decode_wav, encode_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                seed = str(int(doc_id)).encode()
-                raw = (
-                    hashlib.sha256(seed).digest()
-                    + hashlib.sha256(seed + b":b").digest()
-                )
-                pcm = np.frombuffer(raw, dtype="<i2")
-                rate, samples = decode_wav(encode_wav(pcm, 22050))
-                rows.append((doc_id, rate, samples[:, 0].tolist()))
-            yield pd.DataFrame(rows, columns=["doc_id", "rate_in", "s"])
-
-    d = load_table(spark, sf_dir, "documents")
-    decoded = (
-        d.select("doc_id")
-        .transform(spread_input, sf_dir, "documents")
-        .mapInPandas(batches, schema)
-    )
+    decoded = map_rows(scan_docs(spark, sf_dir, ("doc_id",)), schema, row)
     resampled = decoded.withColumn("r", resample_441_320("s", 23))
     return resampled.select(
         "doc_id",

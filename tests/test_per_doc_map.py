@@ -1,8 +1,10 @@
-"""per_doc_map (sources/readers.py): the one Arrow-map skeleton the
-per-doc suite queries share. Every query built on it must keep the
-post-map barrier shape that tools/check_plans.py pins, print its map as
-``batches(...)``, keep its declared schema on an empty input, and return
-exactly what its row function computes.
+"""per_doc_map (sources/readers.py) and its parts: the ``map_rows``
+Arrow row map, the ``scan_docs`` documents scan and the ``sort_by_doc``
+barrier and sort. Every query that sorts through the shared barrier
+must keep the post-map barrier shape that tools/check_plans.py pins and
+print its map as ``batches(...)``; the map must keep its declared
+schema on an empty input and return exactly what its row function
+computes.
 """
 
 from __future__ import annotations
@@ -32,17 +34,24 @@ def _explain(df) -> str:
     )
 
 
-def _per_doc_queries():
+def _barrier_queries():
+    """Registered queries that sort through the shared barrier: the
+    ``per_doc_map`` ones and the store-reading decodes that call
+    ``sort_by_doc`` themselves."""
     return {
         name: q
         for name, q in sorted(load_all().items())
-        if "per_doc_map(" in inspect.getsource(q.fn)
+        if re.search(r"\b(per_doc_map|sort_by_doc)\(", inspect.getsource(q.fn))
     }
 
 
 def test_every_per_doc_query_keeps_the_barrier_shape(spark):
-    queries = _per_doc_queries()
-    assert len(queries) == 53
+    queries = _barrier_queries()
+    store_reading = {
+        n for n, q in queries.items() if "per_doc_map(" not in inspect.getsource(q.fn)
+    }
+    assert len(queries) - len(store_reading) == 53
+    assert len(store_reading) == 4
     bad = {}
     for name, q in queries.items():
         plan = _explain(q.fn(spark, SF))
@@ -101,3 +110,35 @@ def test_rows_equal_row_fn_results(spark):
     assert [r.doc_id for r in out] == sorted(docs)
     for r in out[:3] + out[-3:]:
         assert tuple(r) == row(r.doc_id, docs[r.doc_id])
+
+
+_STORE_DDL = "doc_id bigint, es binary"
+
+
+@pytest.fixture
+def store_row():
+    # nested, so the executors unpickle it by value
+    def row(doc_id, es):
+        es = bytes(es)
+        return (doc_id, len(es), hashlib.sha256(es).hexdigest())
+
+    return row
+
+
+def test_map_rows_over_a_binary_frame_equals_row_fn(spark, store_row):
+    rows = [(i, bytes(range(i % 7)) * (i + 1)) for i in range(40)]
+    store = spark.createDataFrame(rows, _STORE_DDL).repartition(3)
+    out = readers.map_rows(
+        store, "doc_id bigint, n_bytes bigint, es_sha string", store_row
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == sorted(store_row(d, es) for d, es in rows)
+
+
+def test_map_rows_on_an_empty_binary_frame_keeps_the_schema(spark, store_row):
+    ddl = "doc_id bigint, n_bytes bigint, es_sha string"
+    empty = spark.createDataFrame([], _STORE_DDL)
+    out = readers.map_rows(empty, ddl, store_row)
+    assert out.collect() == []
+    assert out.schema == T.StructType.fromDDL(ddl)
+    assert readers.sort_by_doc(out).collect() == []
